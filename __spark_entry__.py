@@ -19,6 +19,9 @@ Cross-engine parity rules used throughout:
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -4222,8 +4225,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # round-2 additions: corpus curation, event-sequence analytics, quantization,
 # edit-distance near-dup, skew-safe aggregation, analytic-window battery
-
-_TOKS_SQL = r"list_filter(string_split_regex(text, '\s+'), x -> x <> '')"
 
 
 def _ngrams_sql(n: int) -> str:
@@ -13219,10 +13220,7 @@ def q_cc_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(d, 3, 16, 4, 0.5).select("doc_a", "doc_b")
-    try:
-        pairs = pairs.localCheckpoint(eager=False)
-    except Exception:
-        pairs = pairs.persist()
+    pairs = pairs.localCheckpoint(eager=False)
     old = (F.col("doc_a") % 10 < 8) & (F.col("doc_b") % 10 < 8)
     stored = dup_clusters(pairs.where(old))
     return cc_index_update(stored, pairs.where(~old)).orderBy("doc_id")
@@ -13461,7 +13459,6 @@ def _lakehouse_tmp() -> str:
     """Scratch root for the transactional-sink queries — RAM-backed
     where available (the sink's files are commit-log bookkeeping, not
     results; same placement as the ingest-family queries)."""
-    import os
     import tempfile
 
     return tempfile.mkdtemp(
@@ -13511,7 +13508,6 @@ def q_lakehouse_merge_roundtrip(
     OPTIMIZE rewrote the DV'd files (sources/sinks.py; reference
     parity: the idempotent skip-if-exists landing of
     scraper_utils.py:25-70, upgraded to a versioned table)."""
-    import os
     import shutil
 
     from kommunedata_data_pipeline_spark.sources import sinks
@@ -13604,7 +13600,6 @@ def q_lakehouse_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle emits each number twice, so replay==snapshot is part of
     the hash, not just a pytest (streaming/cdc.py:consume_changes,
     sources/sinks.py:read_changes)."""
-    import os
     import shutil
 
     from pyspark.sql import Window
@@ -13725,7 +13720,6 @@ def q_stream_table_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     DV delete's marked rows — pinning the stream's offset/diff
     machinery to SQL, not just to pytest parity with `read_changes`
     (sources/table_stream.py)."""
-    import os
     import shutil
 
     from kommunedata_data_pipeline_spark.sources.table_stream import (
@@ -13859,7 +13853,6 @@ def q_lakehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the version numbers themselves are part of the hash, pinning the
     single-writer commit sequence (sources/sinks.py:read_committed/
     table_schema)."""
-    import os
     import shutil
 
     from kommunedata_data_pipeline_spark.sources import sinks
@@ -13934,339 +13927,55 @@ def entry(spark: SparkSession) -> DataFrame:
     return flagship_meetings_to_fetch(spark, "/root/testdata/sf0.001")
 
 
-# Names that already have a green driver-correctness row from round 1.
-# The driver's checker stopped after the first 50 registrations, so the
-# registry is re-ordered to surface not-yet-checked queries first; the
-# r1-green set re-registers afterwards (it stays in the local pytest
-# battery either way).
-_R1_DRIVER_CHECKED = frozenset(
-    {
-        "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-        "q6_forecast_revenue", "q_topk_per_group", "q_anti_join_catalog",
-        "q_semi_join", "q_set_ops", "q_dedup_keep_first",
-        "q_parent_child_assembly", "q_metrics_rollup",
-        "q_rollup_region_nation", "q_window_functions",
-        "q_date_parse_multiformat", "q_doc_key_derivation", "q_json_extract",
-        "q_regexp_extract", "q_incremental_filter", "q_tumbling_window",
-        "q_sliding_window", "q_flagship_worklist", "q_text_stats",
-        "q_lang_guess", "q_quality_score", "q_fingerprint", "q_dedup_exact",
-        "q_minhash_signatures", "q_minhash_lsh_pairs", "q_dup_clusters",
-        "q_ngram_jaccard_pairs", "q_simhash", "q_cosine_topk",
-        "q_ann_lsh_topk", "q4_exists_priority", "q10_returned_items",
-        "q14_promo_effect", "q16_supplier_cnt", "q17_small_qty",
-        "q19_disjunctive", "q22_no_orders",
-        "q_outer_join_agg", "q_cube_aggregate",
-        "q2_min_cost_supplier", "q_arg_extremes", "q_ngram_jaccard_capped",
-        "q7_volume_shipping",
-        # NOT listed on purpose (fronted for a fresh driver row):
-        # q_asof_join (errored in r2 on the NTZ ts change, fixed r3) and
-        # q18_large_orders (rewritten r3 to reuse the HAVING aggregate).
-    }
-)
+# The driver checks only the first ~50 queries that queries() returns
+# against their oracles, so the registry rotates: queries with no green
+# driver row come first, then ascending latest green round. That round
+# comes from the driver's committed CORRECTNESS_rNN.json records next to
+# this file — committing a round's record is the whole per-round step.
+_RECORDS_DIR = os.path.dirname(os.path.abspath(__file__))
+_RECORD_NAME = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-# Queries whose round-2 driver row is green (hash_match) — like the r1
-# set they re-register after anything still unchecked or fixed this
-# round, so the driver's ~50-row check window lands on fresh surface.
-_R2_DRIVER_CHECKED = frozenset(
-    {
-        "q_analytic_ranks", "q_ann_ivf_topk", "q_array_ops",
-        "q_bloom_membership", "q_bpe_token_count", "q_calendar_fill",
-        "q_chunk_documents", "q_cms_heavy_hitters", "q_committee_hunt",
-        "q_contamination", "q_corr_regr", "q_distinct_two_phase",
-        "q_edit_distance_topk", "q_embedding_near_dup",
-        "q_from_json_struct", "q_full_outer_days", "q_funnel_stages",
-        "q_grouping_sets", "q_hll_registers", "q_map_ops", "q_media_meta",
-        "q_mixture_epochs", "q_ngram_novelty", "q_pack_sequences",
-        "q_percentiles", "q_pii_scrub", "q_pivot_event_types",
-        "q_repetition_score", "q_retention_cohorts",
-        "q_rolling_fingerprint", "q_salted_agg", "q_sample_bernoulli",
-        "q_sample_stratified", "q_scd2_apply", "q_sketch_distinct",
-        "q_stats_moments", "q_stream_dedup", "q_stream_enrich",
-        "q_stream_stateful", "q_tfidf_top_terms", "q_token_zipf",
-        "q_unpivot_metrics", "q_window_frames",
-    }
-)
+def _latest_rounds(records_dir: str = _RECORDS_DIR) -> dict[str, int]:
+    """{query: latest round whose driver record has ``hash_match: true``
+    for it}. Rounds are parsed as integers (r100 is newer than r11); a
+    query with no green row in any record is absent. A record that is
+    not a JSON object of row objects raises ValueError naming it."""
+    latest: dict[str, int] = {}
+    for fname in os.listdir(records_dir):
+        m = _RECORD_NAME.fullmatch(fname)
+        if m is None:
+            continue
+        path = os.path.join(records_dir, fname)
+        try:
+            with open(path) as f:
+                rows = json.load(f)
+        except ValueError as e:
+            raise ValueError(f"{path}: not valid JSON ({e})") from e
+        if not isinstance(rows, dict) or not all(
+            isinstance(r, dict) for r in rows.values()
+        ):
+            raise ValueError(f"{path}: expected an object of per-query rows")
+        rnd = int(m.group(1))
+        for name, row in rows.items():
+            if row.get("hash_match") is True and rnd > latest.get(name, 0):
+                latest[name] = rnd
+    return latest
 
 
-# Queries whose round-3 driver row is green (hash_match) — all 50 of
-# CORRECTNESS_r03.json. With this tier in place, every registered query
-# has a green driver row in SOME round; the freshness problem is the 46
-# queries whose LATEST row is round 1, recorded before two testdata
-# regenerations (the events.ts physical-type change among them). Those
-# re-register at the head of the window this round for a fresh check.
-_R3_DRIVER_CHECKED = frozenset(
-    {
-        "q11_concentration_shape", "q13_order_distribution",
-        "q15_top_supplier", "q18_large_orders", "q21_blame_shape",
-        "q8_market_share", "q9_profit_shape", "q_ann_ivf_topk",
-        "q_asof_join", "q_base64_roundtrip", "q_calendar_fill",
-        "q_cluster_weights", "q_cumulative_users", "q_date_arithmetic",
-        "q_event_transitions", "q_first_last_window", "q_from_json_struct",
-        "q_hll_daily", "q_join_size_est", "q_kmv_set_ops", "q_locf_fill",
-        "q_map_ops", "q_media_features", "q_minhash_est_err",
-        "q_null_semantics", "q_pagerank", "q_peak_concurrency",
-        "q_pivot_event_types", "q_priority_per_group", "q_priority_sample",
-        "q_profile_events", "q_quality_gate", "q_quantize_embeddings",
-        "q_range_join", "q_session_attribution", "q_sessionize",
-        "q_skew_join", "q_skyline", "q_snapshot_diff", "q_split_assign",
-        "q_stream_join", "q_stream_session", "q_stream_sliding",
-        "q_stream_tumbling", "q_time_rollup", "q_triangle_count",
-        "q_udtf_lateral", "q_unigram_surprisal", "q_value_histogram",
-        "q_zorder_layout",
-    }
-)
-
-
-# Queries whose round-4 driver row is green (hash_match) — all 50 of
-# CORRECTNESS_r04.json. Note q_cube_dow's r4 row was recorded under the
-# colliding name q_grouping_sets with DIFFERENT registered semantics, so
-# neither query counts that row: q_cube_dow is treated as never-checked
-# and the restored q_grouping_sets keeps its (matching-semantics) r2 row.
-_R4_DRIVER_CHECKED = frozenset(
-    {
-        "q10_returned_items", "q12_priority_mix_shape", "q14_promo_effect",
-        "q16_supplier_cnt", "q17_small_qty", "q19_disjunctive",
-        "q1_pricing_summary", "q20_threshold_shape", "q22_no_orders",
-        "q2_min_cost_supplier", "q3_shipping_priority", "q4_exists_priority",
-        "q5_local_supplier", "q6_forecast_revenue", "q7_volume_shipping",
-        "q_ann_lsh_topk", "q_anti_join_catalog", "q_arg_extremes",
-        "q_cosine_topk", "q_cube_aggregate", "q_date_parse_multiformat",
-        "q_dedup_exact", "q_dedup_keep_first", "q_doc_key_derivation",
-        "q_dup_clusters", "q_fingerprint", "q_flagship_worklist",
-        "q_incremental_filter", "q_json_extract", "q_lang_guess",
-        "q_metrics_rollup", "q_minhash_lsh_pairs", "q_minhash_signatures",
-        "q_ngram_jaccard_capped", "q_ngram_jaccard_pairs",
-        "q_outer_join_agg", "q_parent_child_assembly", "q_quality_score",
-        "q_regexp_extract", "q_rollup_region_nation", "q_semi_join",
-        "q_set_ops", "q_simhash", "q_sliding_window", "q_stream_tws",
-        "q_stream_tws_topk", "q_text_stats", "q_topk_per_group",
-        "q_tumbling_window", "q_window_functions",
-    }
-)
-
-
-# Queries whose round-5 driver row is green (hash_match) — all 50 of
-# CORRECTNESS_r05.json.
-_R5_DRIVER_CHECKED = frozenset(
-    {
-        "q_agg_state_merge", "q_approx_quantile_bound", "q_assoc_rules",
-        "q_benford", "q_bfs_levels", "q_bm25_topk", "q_chi_square",
-        "q_collation", "q_compaction_plan", "q_cube_dow", "q_debounce",
-        "q_edit_join_k2", "q_edit_join_prefix", "q_entropy_report",
-        "q_equidepth_histogram", "q_ewma", "q_exact_percentiles",
-        "q_fuzzy_join_edit", "q_gini_skew", "q_group_by_all",
-        "q_intersect_except", "q_interval_union", "q_k_anonymity",
-        "q_kl_divergence", "q_lateral_topk", "q_m4_downsample",
-        "q_media_frames", "q_path_trigrams", "q_pca_power_iteration",
-        "q_pipe_syntax", "q_prefix_jaccard", "q_python_datasource",
-        "q_record_linkage", "q_recursive_cte", "q_ref_integrity",
-        "q_robust_outliers", "q_rolling_median", "q_seasonal_residuals",
-        "q_sliding_distinct", "q_sssp_bounded", "q_stream_dedup_ttl",
-        "q_stream_join_outer", "q_stream_session_parity",
-        "q_stream_tws_mapstate", "q_table_fingerprint",
-        "q_time_weighted_avg", "q_token_pmi", "q_variant_json",
-        "q_weighted_median", "q_winsorize",
-    }
-)
-
-# Queries whose round-6 driver row is green (hash_match) — all 50 of
-# CORRECTNESS_r06.json. With this tier in place the round-7 window
-# leads with q_cms_heavy_hitters (the single remaining r2-latest row,
-# VERDICT r6 #2) followed by the r3-latest cohort, now the oldest.
-_R6_DRIVER_CHECKED = frozenset(
-    {
-        "q_ab_ztest", "q_analytic_ranks", "q_array_ops",
-        "q_bloom_membership", "q_bootstrap_ci", "q_bpe_token_count",
-        "q_chunk_documents", "q_committee_hunt", "q_contamination",
-        "q_corr_regr", "q_cusum_changepoint", "q_danish_collation",
-        "q_dbscan_classify", "q_distinct_two_phase", "q_dup_spans",
-        "q_edit_distance_topk", "q_embedding_near_dup",
-        "q_full_outer_days", "q_funnel_stages", "q_grid_nn",
-        "q_grouping_sets", "q_hll_registers", "q_kmeans_step",
-        "q_media_meta", "q_minhash_index_update", "q_mixture_epochs",
-        "q_naive_bayes", "q_ngram_novelty", "q_pack_sequences",
-        "q_percentiles", "q_pii_scrub", "q_random_projection",
-        "q_repetition_score", "q_retention_cohorts",
-        "q_rolling_fingerprint", "q_salted_agg", "q_sample_bernoulli",
-        "q_sample_stratified", "q_scd2_apply", "q_sketch_distinct",
-        "q_sql_scripting", "q_stats_moments", "q_stream_dedup",
-        "q_stream_enrich", "q_stream_stateful", "q_tfidf_top_terms",
-        "q_token_zipf", "q_tree_rollup", "q_unpivot_metrics",
-        "q_window_frames",
-    }
-)
-
-_R7_DRIVER_CHECKED = frozenset(
-    {
-        "q13_order_distribution", "q15_top_supplier",
-        "q18_large_orders", "q8_market_share", "q_ann_index_update",
-        "q_ann_ivf_topk", "q_ann_recall", "q_asof_join",
-        "q_bigram_surprisal", "q_blocking_recall", "q_bpe_apply",
-        "q_bpe_merge_step", "q_calibration_bins", "q_cdc_dedup",
-        "q_chunk_dedup", "q_cms_heavy_hitters", "q_containment_pairs",
-        "q_curation_e2e", "q_curriculum_schedule", "q_cut_dup_spans",
-        "q_date_arithmetic", "q_decontaminate", "q_dedup_keep_best",
-        "q_dedup_tier_venn", "q_domain_temperature", "q_dsir_select",
-        "q_dup_source_matrix", "q_epoch_shuffle", "q_first_last_window",
-        "q_hard_negatives", "q_ivf_index_update", "q_logreg_apply",
-        "q_logreg_step", "q_oov_rate", "q_pivot_event_types",
-        "q_pq_rerank", "q_pq_topk", "q_prototype_classify",
-        "q_quality_rules", "q_semantic_dedup",
-        "q_semantic_dedup_2level", "q_sessionize", "q_sorted_blocking",
-        "q_stream_ann_ingest", "q_stream_decontaminate",
-        "q_stream_ingest_dedup", "q_stump_split", "q_surprisal_gate",
-        "q_token_budget_select", "q_winnowing_overlap",
-    }
-)
-# ...and append _R7_DRIVER_CHECKED to _ALL_CHECK_ROUNDS
-
-# Queries whose round-8 driver row is green (hash_match) — all 50 of
-# CORRECTNESS_r08.json, derived via scripts/next_tier.py.
-_R8_DRIVER_CHECKED = frozenset(
-    {
-        "q_ann_ndcg", "q_auc_exact", "q_base64_roundtrip",
-        "q_calendar_fill", "q_cc_index_update", "q_cohens_kappa",
-        "q_corpus_datasheet", "q_cumulative_users",
-        "q_delete_amplification", "q_dict_encoding_audit",
-        "q_er_clusters", "q_freshness_weights", "q_from_json_struct",
-        "q_gmm_em_step", "q_golden_record", "q_kcenter_coreset",
-        "q_label_propagation", "q_leakproof_split", "q_lsh_pr_audit",
-        "q_luhn_pii", "q_map_ops", "q_matryoshka_rerank",
-        "q_media_dedup", "q_media_features", "q_mmr_rerank",
-        "q_negative_sampling", "q_ngram_lang_id", "q_padding_waste",
-        "q_pagerank", "q_partition_skew", "q_pr_curve",
-        "q_quantize_embeddings", "q_range_join", "q_rank_sum_test",
-        "q_rfm_segments", "q_ridge_regression", "q_shard_balance",
-        "q_skyline", "q_stratified_kfold", "q_stream_cc_ingest",
-        "q_stream_join", "q_stream_quality_route", "q_stream_session",
-        "q_stream_sliding", "q_stream_tumbling", "q_tfidf_knn",
-        "q_tokenizer_fertility", "q_triangle_count",
-        "q_value_histogram", "q_zone_map_skip",
-    }
-)
-
-# Queries whose round-9 driver row is green (hash_match) — all 50 of
-# CORRECTNESS_r09.json, derived via scripts/next_tier.py.
-_R9_DRIVER_CHECKED = frozenset(
-    {
-        "q11_concentration_shape", "q1_pricing_summary",
-        "q21_blame_shape", "q3_shipping_priority", "q5_local_supplier",
-        "q6_forecast_revenue", "q9_profit_shape", "q_anti_join_catalog",
-        "q_calibration_bins_hist", "q_centroid_drift",
-        "q_cluster_weights", "q_clustering_depth", "q_cpr_valid",
-        "q_dedup_keep_first", "q_event_pattern", "q_event_transitions",
-        "q_histogram_merge", "q_hll_daily", "q_hybrid_rrf",
-        "q_join_size_est", "q_kmv_set_ops", "q_ks_test", "q_locf_fill",
-        "q_metrics_rollup", "q_minhash_est_err", "q_null_semantics",
-        "q_parent_child_assembly", "q_peak_concurrency",
-        "q_priority_per_group", "q_priority_sample", "q_profile_events",
-        "q_quality_gate", "q_rollup_region_nation", "q_semi_join",
-        "q_session_attribution", "q_set_ops", "q_skew_join",
-        "q_snapshot_diff", "q_split_assign",
-        "q_stream_substring_ingest", "q_substring_cut",
-        "q_substring_dedup", "q_theil_sen", "q_time_rollup",
-        "q_token_keyness", "q_topk_per_group", "q_udtf_lateral",
-        "q_unigram_surprisal", "q_window_functions", "q_zorder_layout",
-    }
-)
-
-_R10_DRIVER_CHECKED = frozenset(
-    {
-        "q10_returned_items", "q12_priority_mix_shape",
-        "q14_promo_effect", "q16_supplier_cnt", "q17_small_qty",
-        "q19_disjunctive", "q20_threshold_shape", "q22_no_orders",
-        "q2_min_cost_supplier", "q4_exists_priority",
-        "q7_volume_shipping", "q_ann_lsh_topk",
-        "q_approx_quantile_bound", "q_arg_extremes", "q_collation",
-        "q_cosine_topk", "q_cube_aggregate", "q_date_parse_multiformat",
-        "q_decontaminate_bloom", "q_dedup_exact",
-        "q_doc_key_derivation", "q_dup_clusters", "q_fingerprint",
-        "q_flagship_worklist", "q_incremental_filter", "q_json_extract",
-        "q_lang_guess", "q_minhash_lsh_pairs", "q_minhash_signatures",
-        "q_ngram_jaccard_capped", "q_ngram_jaccard_pairs",
-        "q_outer_join_agg", "q_pca_power_iteration", "q_pipe_syntax",
-        "q_python_datasource", "q_quality_score", "q_regexp_extract",
-        "q_simhash", "q_sliding_window", "q_stream_dedup_ttl",
-        "q_stream_join_outer", "q_stream_session_parity",
-        "q_stream_state_metrics", "q_stream_tws",
-        "q_stream_tws_mapstate", "q_stream_tws_topk", "q_text_stats",
-        "q_token_pmi", "q_tumbling_window", "q_variant_json",
-    }
-)
-# ...and append _R10_DRIVER_CHECKED to _ALL_CHECK_ROUNDS
-
-_R11_DRIVER_CHECKED = frozenset(
-    {
-        "q_agg_state_merge", "q_assoc_rules", "q_benford",
-        "q_bfs_levels", "q_bm25_topk", "q_bpe_token_count",
-        "q_chi_square", "q_compaction_plan", "q_cube_dow", "q_debounce",
-        "q_distinct_two_phase", "q_edit_join_k2", "q_edit_join_prefix",
-        "q_embedding_near_dup", "q_entropy_report",
-        "q_equidepth_histogram", "q_ewma", "q_exact_percentiles",
-        "q_fuzzy_join_edit", "q_gini_skew", "q_group_by_all",
-        "q_grouping_sets", "q_intersect_except", "q_interval_union",
-        "q_k_anonymity", "q_kl_divergence", "q_lateral_topk",
-        "q_m4_downsample", "q_media_frames", "q_minhash_index_update",
-        "q_path_trigrams", "q_percentiles", "q_prefix_jaccard",
-        "q_record_linkage", "q_recursive_cte", "q_ref_integrity",
-        "q_robust_outliers", "q_rolling_fingerprint",
-        "q_rolling_median", "q_seasonal_residuals",
-        "q_sliding_distinct", "q_sssp_bounded", "q_stream_enrich",
-        "q_stream_stateful", "q_table_fingerprint",
-        "q_time_weighted_avg", "q_unpivot_metrics", "q_weighted_median",
-        "q_window_frames", "q_winsorize",
-    }
-)
-
-_ALL_CHECK_ROUNDS = (
-    _R1_DRIVER_CHECKED,
-    _R2_DRIVER_CHECKED,
-    _R3_DRIVER_CHECKED,
-    _R4_DRIVER_CHECKED,
-    _R5_DRIVER_CHECKED,
-    _R6_DRIVER_CHECKED,
-    _R7_DRIVER_CHECKED,
-    _R8_DRIVER_CHECKED,
-    _R9_DRIVER_CHECKED,
-    _R10_DRIVER_CHECKED,
-    _R11_DRIVER_CHECKED,
-)
-
-
-def _latest_round(name: str) -> int:
-    """Index (1-based) of the latest round whose driver check covered
-    ``name``; 0 = never driver-checked."""
-    for i in range(len(_ALL_CHECK_ROUNDS), 0, -1):
-        if name in _ALL_CHECK_ROUNDS[i - 1]:
-            return i
-    return 0
+def _rotation(records_dir: str = _RECORDS_DIR) -> list[str]:
+    """Registered names, never-checked first, then by ascending latest
+    green round; the sort is stable, so registration order holds within
+    each tier."""
+    latest = _latest_rounds(records_dir)
+    return sorted(_SPARK, key=lambda n: latest.get(n, 0))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, ordered so
-    the driver's ~50-row check window lands on the queries that most
-    need a fresh row: (1) queries with NO driver row in ANY round
-    (new registrations this round); (2) everything else by ascending
-    latest-checked round, registration order within a tier. Round-8
-    window therefore leads with the r8-new queries, then the r3-latest
-    cohort (now the oldest rows). The tier computation is generic over
-    _ALL_CHECK_ROUNDS so adding a round's frozenset is the ONLY
-    per-round maintenance — the r4/r5 staleness bug (a hand-written
-    union that stopped one round short) cannot recur by omission."""
-    restored: list[str] = []
-    never = [
-        n for n in _SPARK if _latest_round(n) == 0 and n not in restored
-    ]
-    rest = sorted(
-        (n for n in _SPARK if _latest_round(n) > 0 and n not in restored),
-        key=lambda n: _latest_round(n),
-    )
-    ordered = never + restored + rest
-    assert len(ordered) == len(set(ordered)) == len(_SPARK), (
-        "registry tiers must partition _SPARK exactly"
-    )
-    return {n: _SPARK[n] for n in ordered}
+    """One entry per implemented operator from SURVEY.md §2, in oracle
+    rotation order (see _rotation): the driver's ~50-row check window
+    lands on the queries whose driver row is missing or oldest."""
+    return {n: _SPARK[n] for n in _rotation()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -70,21 +70,21 @@ def _safe_unpersist(df: DataFrame) -> None:
         pass
 
 
-# Generic one-slot keyed cache for frames an operator reads several times
-# within one plan (both sides of a self-join, long/short splits, verify
-# joins). Same lifecycle discipline as _SIG_CACHE: at most
-# ONE cached frame is pinned per slot, and a new source DataFrame evicts
-# AND unpersists the previous one — a bare per-call .cache() with no
-# eviction leaked one pinned table per invocation under the stress
-# harness's repeated scale runs (VERDICT r5 / ADVICE r5). The slot string
-# must encode every parameter that changes the built frame (column names,
-# thresholds); the source frame is held live so identity comparison is
-# sound (id() values can be recycled after GC). The dict itself is
-# LRU-capped (ADVICE r6): parameterized slots (f"dbscan:{eps}", ...)
-# would otherwise pin one table per parameter combination ever used.
-# Not thread-safe by design — the operators are driver-side plan
-# builders invoked from a single user thread (the Spark driver model);
-# concurrent builders would need their own cache instances.
+# Generic one-slot keyed cache for frames an operator reads several
+# times within one plan (both sides of a self-join, long/short splits,
+# verify joins). At most ONE cached frame is pinned per slot, and a new
+# source DataFrame evicts AND unpersists the previous one — a bare
+# per-call .cache() with no eviction leaked one pinned table per
+# invocation under the stress harness's repeated scale runs (VERDICT r5
+# / ADVICE r5). The slot string must encode every parameter that changes
+# the built frame (column names, thresholds); the source frame is held
+# live so identity comparison is sound (id() values can be recycled
+# after GC). The dict itself is LRU-capped (ADVICE r6): parameterized
+# slots (f"dbscan:{eps}", ...) would otherwise pin one table per
+# parameter combination ever used. Not thread-safe by design — the
+# operators are driver-side plan builders invoked from a single user
+# thread (the Spark driver model); concurrent builders would need their
+# own cache instances.
 _ONE_SLOT_CACHE: dict[str, tuple[DataFrame, DataFrame]] = {}
 _ONE_SLOT_CAP = 16
 
@@ -464,35 +464,6 @@ def minhash_lsh_pairs(
     )
 
 
-# Signature cache, identity-keyed on the input frame (so it only ever
-# reuses WITHIN one query invocation — load_table returns a fresh frame
-# per call, and a different input evicts + unpersists):
-# the banded self-join reads the signature table twice (both join sides
-# compute it independently — no shuffle precedes the join, so nothing is
-# reused without a persist), and three registered queries plus the stress
-# harness each rebuild it. A bare per-call .cache() (the r3 shape) leaked:
-# nothing ever unpersisted, so stress runs at 1x/4x/16x/64x accumulated
-# four signature tables in executor memory. Now at most ONE signature
-# table is pinned per (k, num_hashes): a new input DataFrame evicts and
-# unpersists the previous one.
-# The cached tuple holds the INPUT DataFrame too (not just its id): a
-# live reference makes identity comparison sound — id() values can be
-# recycled after garbage collection.
-_SIG_CACHE: dict[tuple[int, int], tuple[DataFrame, DataFrame]] = {}
-
-
-def _cached_signatures(documents: DataFrame, k: int, num_hashes: int) -> DataFrame:
-    key = (k, num_hashes)
-    hit = _SIG_CACHE.get(key)
-    if hit is not None and hit[0] is documents:
-        return hit[1]
-    if hit is not None:
-        _safe_unpersist(hit[1])
-    sigs = minhash_signatures(documents, k, num_hashes).cache()
-    _SIG_CACHE[key] = (documents, sigs)
-    return sigs
-
-
 def minhash_band_table(
     documents: DataFrame, k: int = 3, num_hashes: int = 16, bands: int = 4
 ) -> DataFrame:
@@ -505,7 +476,14 @@ def minhash_band_table(
     rows written by one run join correctly against rows written by any
     later run."""
     r = num_hashes // bands
-    sigs = _cached_signatures(documents, k, num_hashes)
+    # the banded self-join reads the signatures on both sides: pin them
+    # once per input frame (load_table returns a fresh frame per call, so
+    # reuse stays within one query)
+    sigs = one_slot_cached(
+        f"sigs:{k}:{num_hashes}",
+        documents,
+        lambda: minhash_signatures(documents, k, num_hashes),
+    )
     return sigs.select(
         "doc_id",
         "sig",
@@ -1550,18 +1528,6 @@ def winnowing_overlap_pairs(
     )
 
 
-# persist()-fallback frames (Spark Connect path only) — see
-# ranged_global_rank: bounded FIFO so a long-lived Connect session
-# holds at most _RANGED_RANK_FALLBACK_CAP cached frames, and a frame
-# is only evicted after CAP-1 newer calls — by then every plan that
-# composed it (rfm_segments chains three ranged ranks before a single
-# action) has executed. Guarded by a lock: concurrent query threads
-# share the module global.
-_RANGED_RANK_FALLBACK_CACHE: list = []
-_RANGED_RANK_FALLBACK_CAP = 8
-_RANGED_RANK_FALLBACK_LOCK = __import__("threading").Lock()
-
-
 def ranged_global_rank(
     df: DataFrame,
     order_cols: list,
@@ -1579,17 +1545,8 @@ def ranged_global_rank(
     offset + row_number PARTITIONED by the stamped partition id.
 
     The stamped frame is lazily localCheckpoint-ed so the sampled
-    range boundaries are pinned across its two uses (counts + rank);
-    under Spark Connect builds without localCheckpoint it falls back
-    to persist() — both uses still see one materialization. Fallback
-    frames live in a bounded FIFO (cap 8, lock-guarded): a frame is
-    evicted only after 8 newer calls, so plans that COMPOSE several
-    ranged ranks before one action (rfm_segments chains three) never
-    lose a persist before the consuming action runs, and a long-lived
-    Connect session still can't leak unboundedly (ADVICE r9: the
-    previous evict-on-next-call scheme could unpin a not-yet-executed
-    frame's boundaries and emit wrong ranks). Ties
-    cannot straddle partitions when ``order_cols`` ends in a unique
+    range boundaries are pinned across its two uses (counts + rank).
+    Ties cannot straddle partitions when ``order_cols`` ends in a unique
     id (callers pass one); RangePartitioner routes equal keys to one
     partition regardless."""
     spark = df.sparkSession
@@ -1600,18 +1557,7 @@ def ranged_global_rank(
     parted = df.repartitionByRange(
         max(n_parts, 1), *[F.col(c) for c in order_cols]
     ).withColumn("__pid", F.spark_partition_id())
-    try:
-        parted = parted.localCheckpoint(eager=False)
-    except Exception:
-        parted = parted.persist()
-        with _RANGED_RANK_FALLBACK_LOCK:
-            _RANGED_RANK_FALLBACK_CACHE.append(parted)
-            while len(_RANGED_RANK_FALLBACK_CACHE) > _RANGED_RANK_FALLBACK_CAP:
-                old = _RANGED_RANK_FALLBACK_CACHE.pop(0)
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
+    parted = parted.localCheckpoint(eager=False)
     wb = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         parted.groupBy("__pid")
@@ -1748,10 +1694,7 @@ def er_clusters(
     # the pair stream is consumed 2-3 times downstream (the CC's
     # small-graph count, the CC itself) — pin it so the deletion join
     # runs once, not per consumer
-    try:
-        pairs = pairs.localCheckpoint(eager=False)
-    except Exception:
-        pairs = pairs.persist()
+    pairs = pairs.localCheckpoint(eager=False)
     clusters = dup_clusters(pairs).select(
         F.col("doc_id").alias("rid"), F.col("cluster_id").alias("entity_id")
     )

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import one_slot_cached
+
 PR_BASE = 150000       # 0.15 in micro-rank units
 PR_DAMP_NUM = 85       # damping 0.85 as a ratio
 PR_DAMP_DEN = 100
@@ -66,8 +68,8 @@ def pagerank_integer(
 _PR_BROADCAST_MAX_NODES = 2_000_000
 
 
-def _pagerank_loop(edges: DataFrame, n_iter: int) -> DataFrame:
-    edges = edges.select("src", "dst").cache()
+def _pagerank_loop(raw: DataFrame, n_iter: int) -> DataFrame:
+    edges = one_slot_cached("graph_edges", raw, lambda: raw.select("src", "dst"))
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -79,7 +81,11 @@ def _pagerank_loop(edges: DataFrame, n_iter: int) -> DataFrame:
     degs = edges.groupBy("src").agg(F.count("*").alias("deg"))
     # Degree is loop-invariant: staple it onto each edge ONCE so the
     # per-round plan is a single join with the rank table, not two.
-    edges_deg = edges.join(degs, "src").select("src", "dst", "deg").cache()
+    edges_deg = one_slot_cached(
+        "pagerank_edges_deg",
+        edges,
+        lambda: edges.join(degs, "src").select("src", "dst", "deg"),
+    )
     ranks = nodes.select("node", F.lit(PR_BASE).cast("bigint").alias("r"))
     for _ in range(n_iter):
         # The rank table is bounded by the NODE count — tiny next to the
@@ -224,7 +230,8 @@ def bfs_levels(
     floor — measured 2x end-to-end. Results are
     partitioning-independent."""
     spark = edges.sparkSession
-    edges = edges.select("src", "dst").cache()
+    raw = edges
+    edges = one_slot_cached("graph_edges", raw, lambda: raw.select("src", "dst"))
     n_bound = _node_count_bound(edges)
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
@@ -332,7 +339,10 @@ def sssp_bounded(
     only. Shuffle partitions are scoped to the loop and sized from the
     node bound, like bfs_levels."""
     spark = edges.sparkSession
-    edges = edges.select("src", "dst", "w").cache()
+    raw = edges
+    edges = one_slot_cached(
+        "graph_edges_w", raw, lambda: raw.select("src", "dst", "w")
+    )
     n_bound = _node_count_bound(edges)
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)

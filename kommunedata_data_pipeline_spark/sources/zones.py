@@ -40,9 +40,9 @@ from pyspark.sql import functions as F
 
 ZONES_NAME = "_zones.json"
 
-# Reads recording (for the SCALING measurement only): when set to a
-# list, every pruned read appends a stats dict. Never enabled in
-# library paths; scripts/measure_ingest_read.py flips it.
+# Reads recording: when set to a list, every pruned read appends a
+# stats dict. Never enabled in library paths; perfbench's tracing,
+# tests/test_round11.py and scripts/ingest_read_volume.py flip it.
 READ_LOG: list | None = None
 
 

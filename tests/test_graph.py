@@ -245,3 +245,28 @@ def test_ancestor_pairs_doubling_matches_reference(spark):
             for r in ancestor_pairs_doubling(df, depth).collect()
         }
         assert got == ref(depth), depth
+
+
+def _cache_pins(spark) -> int:
+    """Persistent RDDs that are cache pins: localCheckpoint also persists
+    its RDD (freed by the context cleaner on GC, not by the operator), so
+    those are left out of the count."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return sum(
+        1
+        for k in rdds.keySet().toArray()
+        if not rdds.get(k).rdd().isLocallyCheckpointed()
+    )
+
+
+def test_pagerank_releases_edge_pins_between_calls(spark):
+    """Each call caches its edge tables through the shared one-slot
+    cache, so a second call on a fresh edge frame evicts the first
+    call's pins instead of adding to them."""
+    def run():
+        df = spark.createDataFrame(EDGES, "src long, dst long")
+        pagerank_integer(df, 2, shuffle_partitions=4).collect()
+        return _cache_pins(spark)
+
+    first = run()
+    assert run() <= first
