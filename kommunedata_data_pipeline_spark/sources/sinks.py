@@ -80,6 +80,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .zones import footer_stats
+
 
 def write_partitioned(
     df: DataFrame,
@@ -601,90 +603,6 @@ def table_history(path: str) -> list[dict]:
     return out
 
 
-def _json_scalar(v) -> bool:
-    """True for values whose ordering survives a JSON round-trip
-    (commit records are JSON): int/float/str/bool, no NaN/inf, no
-    bytes/dates. Anything else is simply not recorded — conservative,
-    the file is read instead of skipped."""
-    import math
-
-    if isinstance(v, bool):
-        return True
-    if isinstance(v, (int, str)):
-        return True
-    if isinstance(v, float):
-        return math.isfinite(v)
-    return False
-
-
-def _footer_stats(path: str, rels: list[str]) -> dict:
-    """Per-file column statistics read from the staged parquet FOOTERS
-    — driver-side, zero Spark jobs (the Delta/Iceberg write-side stats
-    collection; VERDICT r11 engine-extension direction): {rel:
-    {"rows": n, "cols": {col: [min, max, null_count]}}}. Only
-    top-level atomic columns whose min/max are JSON-safe get entries;
-    an all-null column records [null, null, rows] (sound to skip for
-    any value probe — it holds no non-null values); a column whose
-    stats any row group failed to write gets NO entry (conservative:
-    probes on it never skip). Multi-row-group files fold min/min and
-    max/max. Partition columns live in the directory names, not the
-    footers — they get no entry here (partition pruning is the
-    directory layout's job)."""
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # stats are an optimization, never a gate
-        return {}
-    out = {}
-    for rel in rels:
-        try:
-            md = pq.ParquetFile(os.path.join(path, rel)).metadata
-        except Exception:
-            continue
-        # col -> [lo, hi, nulls] | None (= proven unusable)
-        agg: dict[str, list | None] = {}
-        for gi in range(md.num_row_groups):
-            rg = md.row_group(gi)
-            for ci in range(rg.num_columns):
-                c = rg.column(ci)
-                name = c.path_in_schema
-                if "." in name:  # nested leaf: not a top-level column
-                    continue
-                if name in agg and agg[name] is None:
-                    continue
-                s = c.statistics
-                cur = agg.get(name)
-                if s is None or s.null_count is None:
-                    agg[name] = None
-                    continue
-                if s.has_min_max:
-                    lo, hi = s.min, s.max
-                    if not (_json_scalar(lo) and _json_scalar(hi)):
-                        agg[name] = None
-                        continue
-                elif s.null_count == rg.num_rows:
-                    lo = hi = None  # all-null row group
-                else:
-                    agg[name] = None
-                    continue
-                if cur is None:  # absent (poisoned entries skipped above)
-                    agg[name] = [lo, hi, s.null_count]
-                else:
-                    if lo is not None and (
-                        cur[0] is None or lo < cur[0]
-                    ):
-                        cur[0] = lo
-                    if hi is not None and (
-                        cur[1] is None or hi > cur[1]
-                    ):
-                        cur[1] = hi
-                    cur[2] += s.null_count
-        cols = {k: v for k, v in agg.items() if v is not None}
-        out[rel] = {"rows": md.num_rows, "cols": cols}
-    return out
-
-
 def _stats_ranges(entry: dict | None) -> dict | None:
     """Commit-record stats entry -> the {col: [lo, hi]} shape
     `zones._file_matches` prunes with; None (always read) for files
@@ -1073,7 +991,7 @@ def merge_upsert(
             added = _stage_part_files(fresh, path, pcols)
         finally:
             fresh.unpersist()
-        stats = _footer_stats(path, added)
+        stats = footer_stats(path, added)
         if _test_hook is not None:
             _test_hook(attempt)
         if _try_commit(
@@ -1137,7 +1055,7 @@ def _try_commit(
     evolution and schema-as-of-version time travel). ``dv_added`` is a
     list of (data file rel, dv sidecar rel, n rows) triples for
     merge-on-read deletes. ``stats`` maps each added file to its
-    footer statistics (`_footer_stats`) — the data-skipping and
+    footer statistics (`zones.footer_stats`) — the data-skipping and
     metadata-only-aggregate source. ``constraints`` (only set/drop
     constraint commits pass it) is the full POST-commit CHECK map;
     absent means unchanged."""
@@ -1505,7 +1423,7 @@ def merge_update(
             kr = _key_ranges_from_row(r, keys)
             schema_json = base_schema_json
         added = _stage_part_files(staged_frame, path, pcols)
-        stats = _footer_stats(path, added)
+        stats = footer_stats(path, added)
         if _test_hook is not None:
             _test_hook(attempt)
         if _try_commit(
@@ -1678,7 +1596,7 @@ def merge_delete(
         )
         kr = _key_ranges_from_row(r, keys)
         added = _stage_part_files(keep_old, path, pcols)
-        stats = _footer_stats(path, added)
+        stats = footer_stats(path, added)
         if _test_hook is not None:
             _test_hook(attempt)
         if _try_commit(
@@ -1858,7 +1776,7 @@ def optimize_table(
         else:
             frame = snapshot.repartition(n_files)
         added = _stage_part_files(frame, path, pcols)
-        stats = _footer_stats(path, added)
+        stats = footer_stats(path, added)
         if _test_hook is not None:
             _test_hook(attempt)
         if _try_commit(

@@ -17,32 +17,34 @@ fresh batch vs huge history):
   between compactions is bounded by the compaction trigger (the
   size-tiered ratio), never by table age.
 
-Soundness is unconditional, not contract-dependent: a file absent from
-the manifest is ALWAYS read (a crash between a data write and the
-manifest update degrades to a full read of the new file, never a
-dropped row), and a file is skipped only when its recorded [min, max]
-provably cannot contain any probe value. The manifest itself is
-file-count-sized driver state — the same class as the commit log
+The manifest is a cache of parquet footer statistics: `update_zones`
+records each new file's [min, max] from that file's own footer
+(`footer_stats` — driver-side, zero Spark jobs), so an entry can never
+carry another file's or another batch's range. Soundness is
+unconditional: a file absent from the manifest is ALWAYS read (a crash
+between a data write and the manifest update degrades to a full read
+of the new file until the next update, never a dropped row), and a
+file is skipped only when its recorded [min, max] provably cannot
+contain any probe value. The manifest itself is file-count-sized
+driver state — the same class as the commit log
 (`sinks.committed_files`), and at 100 TB it maps onto any table
-format's per-file column statistics (Delta/Iceberg stats; parquet
-footer min/max) with the identical skip rule.
+format's per-file column statistics (Delta/Iceberg stats) with the
+identical skip rule.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import uuid
 from bisect import bisect_left
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 ZONES_NAME = "_zones.json"
 
 # Reads recording: when set to a list, every pruned read appends a
 # stats dict. Never enabled in library paths; perfbench's tracing,
-# tests/test_round11.py and scripts/ingest_read_volume.py flip it.
+# tests/test_zones.py and scripts/ingest_read_volume.py flip it.
 READ_LOG: list | None = None
 
 
@@ -86,112 +88,119 @@ def _save_zones(table_path: str, zones: dict) -> None:
     os.replace(tmp, _zones_file(table_path))
 
 
-def _rel_of_uri(uri: str, table_path: str) -> str:
-    from urllib.parse import unquote, urlparse
+def _json_scalar(v) -> bool:
+    """True for values whose ordering survives a JSON round-trip (the
+    manifest and the commit records are JSON): int/float/str/bool, no
+    NaN/inf, no bytes/dates. Anything else is simply not recorded —
+    conservative, the file is read instead of skipped."""
+    if isinstance(v, (bool, int, str)):
+        return True
+    if isinstance(v, float):
+        return math.isfinite(v)
+    return False
 
-    p = unquote(urlparse(uri).path or uri)
-    return os.path.normpath(os.path.relpath(p, os.path.abspath(table_path)))
+
+def footer_stats(root: str, rels: list[str]) -> dict:
+    """Per-file column statistics read from parquet FOOTERS —
+    driver-side, zero Spark jobs (the Delta/Iceberg write-side stats
+    collection): {rel: {"rows": n, "cols": {col: [min, max,
+    null_count]}}}, each ``rel`` joined onto ``root`` (an absolute
+    ``rel`` stands alone). Only top-level atomic columns whose min/max
+    are JSON-safe get entries; an all-null column records [null, null,
+    rows] (sound to skip for any value probe — it holds no non-null
+    values); a column whose stats any row group failed to write gets
+    NO entry (conservative: probes on it never skip). Multi-row-group
+    files fold min/min and max/max. A file whose footer cannot be read
+    is left out. Partition columns live in the directory names, not
+    the footers — they get no entry here (partition pruning is the
+    directory layout's job)."""
+    try:
+        import pyarrow.parquet as pq
+    except ImportError:  # stats are an optimization, never a gate
+        return {}
+    out = {}
+    for rel in rels:
+        try:
+            md = pq.ParquetFile(os.path.join(root, rel)).metadata
+        except Exception:
+            continue
+        # col -> [lo, hi, nulls] | None (= proven unusable)
+        agg: dict[str, list | None] = {}
+        for gi in range(md.num_row_groups):
+            rg = md.row_group(gi)
+            for ci in range(rg.num_columns):
+                c = rg.column(ci)
+                name = c.path_in_schema
+                if "." in name:  # nested leaf: not a top-level column
+                    continue
+                if name in agg and agg[name] is None:
+                    continue
+                s = c.statistics
+                cur = agg.get(name)
+                if s is None or s.null_count is None:
+                    agg[name] = None
+                    continue
+                if s.has_min_max:
+                    lo, hi = s.min, s.max
+                    if not (_json_scalar(lo) and _json_scalar(hi)):
+                        agg[name] = None
+                        continue
+                elif s.null_count == rg.num_rows:
+                    lo = hi = None  # all-null row group
+                else:
+                    agg[name] = None
+                    continue
+                if cur is None:  # absent (poisoned entries skipped above)
+                    agg[name] = [lo, hi, s.null_count]
+                else:
+                    if lo is not None and (
+                        cur[0] is None or lo < cur[0]
+                    ):
+                        cur[0] = lo
+                    if hi is not None and (
+                        cur[1] is None or hi > cur[1]
+                    ):
+                        cur[1] = hi
+                    cur[2] += s.null_count
+        cols = {k: v for k, v in agg.items() if v is not None}
+        out[rel] = {"rows": md.num_rows, "cols": cols}
+    return out
 
 
-def update_zones(
-    spark: SparkSession, table_path: str, cols: list[str]
-) -> dict:
-    """Incrementally extend the manifest: compute min/max of ``cols``
-    for every data file NOT yet recorded (one Spark job over just
-    those files — batch-sized after an append), drop entries whose
-    files vanished (compaction), and atomically replace the manifest.
-    Single-writer per table (the ingest stores' discipline); a crashed
-    update leaves the old manifest, which is always sound."""
+def update_zones(table_path: str, cols: list[str]) -> dict:
+    """Bring the manifest up to date with the files on disk: record
+    ``cols``' [min, max] for every data file NOT yet recorded, read
+    from that file's own footer (`footer_stats` — driver-side, zero
+    Spark jobs, O(new files)), drop entries whose files vanished
+    (compaction), and atomically replace the manifest. A zero-row file
+    gets [None, None] per column (skipped by every probe — it holds no
+    rows to miss); a column whose footer carries no statistics gets no
+    entry (probes on it read the file); a file whose footer cannot be
+    read stays unmanifested and is retried on the next update.
+
+    Every entry is exactly what its own file's footer says, so it is
+    sound whoever wrote the file and whenever the update runs — after
+    an append, after a crash left files unmanifested, or on a freshly
+    compacted base. Single-writer per table (the ingest stores'
+    discipline); a crashed update leaves the old manifest, which is
+    always sound."""
     files = list_parquet_files(table_path)
     if files is None:
         return {}
-    zones = load_zones(table_path)
     present = set(files)
-    zones = {k: v for k, v in zones.items() if k in present}
+    old = load_zones(table_path)
+    zones = {k: v for k, v in old.items() if k in present}
     new = [f for f in files if f not in zones]
-    if new:
-        df = spark.read.parquet(
-            *[os.path.join(table_path, f) for f in new]
-        )
-        aggs = []
-        for c in cols:
-            aggs.append(F.min(c).alias(f"__lo_{c}"))
-            aggs.append(F.max(c).alias(f"__hi_{c}"))
-        stats = (
-            df.select(*cols, F.input_file_name().alias("__f"))
-            .groupBy("__f")
-            .agg(*aggs)
-            .collect()
-        )
-        seen_rel = set()
-        for r in stats:
-            rel = _rel_of_uri(r["__f"], table_path)
+    for rel, st in footer_stats(table_path, new).items():
+        if st["rows"] == 0:
+            zones[rel] = {c: [None, None] for c in cols}
+        else:
             zones[rel] = {
-                c: [r[f"__lo_{c}"], r[f"__hi_{c}"]] for c in cols
+                c: st["cols"][c][:2] for c in cols if c in st["cols"]
             }
-            seen_rel.add(rel)
-        # zero-row files produce no groupBy row: record an impossible
-        # range (nulls) so they are skipped by every probe — sound,
-        # they hold no rows to miss
-        for f in new:
-            if f not in seen_rel:
-                zones[f] = {c: [None, None] for c in cols}
-    _save_zones(table_path, zones)
-    return zones
-
-
-def record_zone_ranges(
-    table_path: str, ranges: dict, files: list[str]
-) -> None:
-    """Tag exactly the data files the CALLER JUST WROTE (``files``,
-    table-relative paths) with the caller-known value ranges
-    (``{col: (lo, hi)}``) — zero Spark jobs. Sound because a zone
-    entry only has to be a SUPERSET of the file's actual values: a
-    wider range can only make a probe read a file it didn't need,
-    never skip one it did — AND because only the caller's own files
-    are tagged: an unmanifested file some OTHER writer (or a crashed
-    compaction swap) left behind keeps no entry and is therefore
-    always read conservatively. Tagging every unmanifested file with
-    this batch's range would be unsound — a crash between a
-    compaction's base swap and its manifest rebuild would let the next
-    batch stamp the whole base with its narrow range, silently
-    skipping files that do hold other keys (ADVICE r11 #1).
-
-    This is the per-batch append path (the writer already knows its
-    batch's key range and its new file names); compaction replaces the
-    coarse entries with exact per-file stats (`update_zones`),
-    amortized by the doubling rule like the compaction write itself."""
-    if not files:
-        return
-    present = list_parquet_files(table_path)
-    if not present:
-        return
-    zones = load_zones(table_path)
-    present_set = set(present)
-    zones = {k: v for k, v in zones.items() if k in present_set}
-    entry = {c: [lo, hi] for c, (lo, hi) in ranges.items()}
-    changed = False
-    for f in files:
-        f = os.path.normpath(f)
-        if f in present_set and f not in zones:
-            zones[f] = dict(entry)
-            changed = True
-    if changed:
+    if zones != old:
         _save_zones(table_path, zones)
-
-
-def new_files_since(
-    table_path: str, before: list[str] | None
-) -> list[str]:
-    """Table-relative data files present now but not in ``before`` —
-    the caller's just-written set for `record_zone_ranges` after a
-    plain `mode("append")` write (driver-side listing only). ``before``
-    None (table didn't exist) means everything present is new."""
-    now = list_parquet_files(table_path) or []
-    if not before:
-        return now
-    prior = set(before)
-    return [f for f in now if f not in prior]
+    return zones
 
 
 def _file_matches(entry: dict | None, prune: dict) -> bool:

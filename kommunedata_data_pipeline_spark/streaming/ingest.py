@@ -79,9 +79,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.zones import (
+    footer_stats,
     list_parquet_files,
-    new_files_since,
-    record_zone_ranges,
     select_pruned_files,
     update_zones,
 )
@@ -257,7 +256,6 @@ def _append_delta(
     delta: DataFrame,
     index_path: str,
     zone_cols: list[str] | None = None,
-    zone_ranges: dict | None = None,
 ) -> None:
     """Persist ONE batch's store delta as a new `ver=N` partition dir.
     The delta is written to a sibling staging dir first, then a SINGLE
@@ -268,16 +266,11 @@ def _append_delta(
     store — the linear-cumulative-I/O contract of this family.
 
     Zone manifest maintenance (so pruned reads can skip the delta):
-    ``zone_ranges`` ({col: (lo, hi)} — the batch's caller-known value
-    ranges) tags THE NEW `ver=N` DIR'S FILES ONLY, driver-side, zero
-    Spark jobs (sound: a superset range never causes a wrong skip, and
-    tagging is scoped to the files this append created — an
-    unmanifested file left by anything else stays untagged and is read
-    conservatively; ADVICE r11 #1). ``zone_cols`` instead computes
-    exact per-file min/max with one delta-sized Spark job — the
-    maintenance-path option. A crash between the rename and the
+    with ``zone_cols``, the new files' [min, max] of those columns are
+    read from their own parquet footers (`zones.update_zones` —
+    driver-side, zero Spark jobs). A crash between the rename and the
     manifest update leaves the delta unmanifested — read conservatively
-    by every probe, never lost.
+    by every probe, never lost, and recorded by the next update.
 
     The write is REBALANCE-hinted (the optimized-write discipline): AQE
     sizes the output partitions to the advisory target, so a tiny
@@ -290,34 +283,23 @@ def _append_delta(
     delta.hint("rebalance").write.mode("overwrite").parquet(tmp)
     _fold_small_delta_files(tmp)
     os.makedirs(index_path, exist_ok=True)
-    ver_name = f"ver={_next_ver(index_path)}"
-    dest = os.path.join(index_path, ver_name)
+    dest = os.path.join(index_path, f"ver={_next_ver(index_path)}")
     os.replace(tmp, dest)
     if WRITE_LOG is not None:
         WRITE_LOG.append(
             {"kind": "delta", "path": index_path, "bytes": _dir_bytes(dest)}
         )
-    if zone_ranges is not None:
-        mine = [
-            os.path.join(ver_name, fn)
-            for fn in os.listdir(dest)
-            if fn.endswith(".parquet")
-        ]
-        record_zone_ranges(index_path, zone_ranges, mine)
-    elif zone_cols:
-        update_zones(delta.sparkSession, index_path, zone_cols)
+    if zone_cols:
+        update_zones(index_path, zone_cols)
 
 
 def _append_landing_and_deltas(
     kept: DataFrame,
     out_path: str,
-    out_ranges: dict,
     band_delta: DataFrame,
     band_path: str,
-    band_ranges: dict,
     ids_delta: DataFrame,
     ids_path: str,
-    ids_ranges: dict,
     id_col: str,
 ) -> None:
     """ONE Spark write job per micro-batch for all three persisted
@@ -341,6 +323,10 @@ def _append_landing_and_deltas(
       (`_dedup_ingest` docstring, cases a-c);
     - an empty side appends nothing at all (appending a zero-row delta
       and skipping it are the same store).
+
+    After each store's files become visible, its zone manifest records
+    them from their own footers (`zones.update_zones`): ``id_col`` for
+    all three, plus ``bkey`` for the band store.
 
     Readers are unaffected by the union schema: every catalog/ids
     consumer reads with an explicit schema (extra file columns are
@@ -380,7 +366,6 @@ def _append_landing_and_deltas(
         if os.path.isdir(land_src):
             _fold_small_delta_files(land_src)
             os.makedirs(out_path, exist_ok=True)
-            moved = []
             for fn in sorted(os.listdir(land_src)):
                 if not fn.endswith(".parquet"):
                     continue
@@ -389,31 +374,23 @@ def _append_landing_and_deltas(
                     os.path.join(land_src, fn),
                     os.path.join(out_path, dest_fn),
                 )
-                moved.append(dest_fn)
-            record_zone_ranges(out_path, out_ranges, moved)
-        for store, path, ranges in (
-            ("band", band_path, band_ranges),
-            ("ids", ids_path, ids_ranges),
+            update_zones(out_path, [id_col])
+        for store, path, zone_cols in (
+            ("band", band_path, [id_col, "bkey"]),
+            ("ids", ids_path, [id_col]),
         ):
             src = os.path.join(tmp, f"__store={store}")
             if not os.path.isdir(src):
                 continue  # empty side (e.g. a replayed batch)
             _fold_small_delta_files(src)
             os.makedirs(path, exist_ok=True)
-            ver_name = f"ver={_next_ver(path)}"
-            dest = os.path.join(path, ver_name)
+            dest = os.path.join(path, f"ver={_next_ver(path)}")
             os.replace(src, dest)
             if WRITE_LOG is not None:
                 WRITE_LOG.append(
                     {"kind": "delta", "path": path, "bytes": _dir_bytes(dest)}
                 )
-            if ranges is not None:
-                mine = [
-                    os.path.join(ver_name, fn)
-                    for fn in os.listdir(dest)
-                    if fn.endswith(".parquet")
-                ]
-                record_zone_ranges(path, ranges, mine)
+            update_zones(path, zone_cols)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -451,8 +428,8 @@ def compact_index(
     ``zone_cols``) rebuild the zone manifest — the layout that makes
     per-batch pruned reads open <= B base files for B probe keys
     (module docstring of `sources.zones`). The manifest rebuild reads
-    the new base's probe columns once per compaction — amortized by
-    the same doubling rule as the compaction write itself."""
+    only the new base files' footers (`zones.update_zones`), driver-
+    side, zero Spark jobs."""
     raw = _load_index(spark, index_path, schema)
     resolved = resolve(raw) if resolve is not None else raw
     if range_col is not None:
@@ -474,13 +451,11 @@ def compact_index(
     os.makedirs(new)
     os.replace(tmp, os.path.join(new, "ver=0"))
     if zone_cols:
-        # build the exact per-file manifest INSIDE the staged dir so the
-        # swap below installs data + manifest atomically: the fresh base
-        # is never live-but-unmanifested, so no later append can tag it
-        # with a batch's narrow range (ADVICE r11 #1) and no probe ever
-        # pays a conservative full read of the whole base after a crash
-        # between swap and manifest write (the pre-r12 window)
-        update_zones(spark, new, zone_cols)
+        # build the per-file manifest INSIDE the staged dir so the swap
+        # below installs data + manifest atomically: no probe ever pays
+        # a conservative full read of the whole base after a crash
+        # between swap and manifest write
+        update_zones(new, zone_cols)
     bak = f"{index_path}__bak_{uuid.uuid4().hex[:8]}"
     if os.path.exists(index_path):
         os.replace(index_path, bak)
@@ -506,11 +481,7 @@ def store_bytes(index_path: str) -> tuple[int, int]:
     for name in os.listdir(index_path):
         if not name.startswith("ver="):
             continue
-        total = 0
-        sub = os.path.join(index_path, name)
-        for root, _dirs, files in os.walk(sub):
-            for fn in files:
-                total += os.path.getsize(os.path.join(root, fn))
+        total = _dir_bytes(os.path.join(index_path, name))
         if name == "ver=0":
             base += total
         else:
@@ -681,6 +652,26 @@ def _worth_pruning(index_path: str) -> bool:
     return files is not None and len(files) >= PRUNE_MIN_FILES
 
 
+# Once two consecutive batches of a stream overflow PRUNE_MAX_KEYS, this
+# many batches skip the key-set probe; the batch after them probes once
+# more — an overflow re-arms the skip, a fit ends it.
+PROBE_SKIP_BATCHES = 8
+
+
+def _probe_skipped(overflow_state: dict | None) -> bool:
+    """True iff this batch skips the key-set probe (see
+    `_key_set_probe`), counting the skip. A False answer changes no
+    state, so a caller may ask before deciding to call
+    `_key_set_probe`, which asks again."""
+    if overflow_state is None or overflow_state.get("overflows", 0) < 2:
+        return False
+    skipped = overflow_state.get("skipped", 0)
+    if skipped >= PROBE_SKIP_BATCHES:
+        return False  # due: probe once more
+    overflow_state["skipped"] = skipped + 1
+    return True
+
+
 def _key_set_probe(
     frame: DataFrame,
     key_col: str,
@@ -699,17 +690,17 @@ def _key_set_probe(
     first (and shared) materialization.
 
     ``overflow_state``: a caller-held per-stream dict. When the
-    previous TWO batches of the same stream both overflowed the key
-    cap, the probe is skipped without spending its job — batches of a
-    stream are similar-sized, so a high-cardinality key (the substring
-    ingest's per-char grams, where distinct keys ≈ batch characters)
-    would otherwise pay a full distinct+collect pass per batch only to
-    learn the same overflow again. A later batch that fits (the state
-    resets on success) resumes probing; skipping is always sound —
-    pruning is an optimization over the full read."""
-    if overflow_state is not None and overflow_state.get("overflows", 0) >= 2:
-        return None
-    if not _worth_pruning(index_path):
+    previous TWO probed batches of the same stream both overflowed the
+    key cap, the next `PROBE_SKIP_BATCHES` batches skip the probe
+    without spending its job — batches of a stream are similar-sized,
+    so a high-cardinality key (the substring ingest's per-char grams,
+    where distinct keys ≈ batch characters) would otherwise pay a full
+    distinct+collect pass per batch only to learn the same overflow
+    again. The batch after the skipped ones probes again: an overflow
+    re-arms the skip, a fit clears the state and probing resumes.
+    Skipping is always sound — pruning is an optimization over the
+    full read."""
+    if _probe_skipped(overflow_state) or not _worth_pruning(index_path):
         return None
     rows = (
         frame.select(key_col)
@@ -722,9 +713,10 @@ def _key_set_probe(
             overflow_state["overflows"] = (
                 overflow_state.get("overflows", 0) + 1
             )
+            overflow_state["skipped"] = 0
         return None
     if overflow_state is not None:
-        overflow_state["overflows"] = 0
+        overflow_state.clear()
     return {key_col: ("set", sorted(r[0] for r in rows))}
 
 
@@ -732,17 +724,18 @@ def _footer_id_range(
     batch: DataFrame, id_col: str
 ) -> tuple[int, int] | None:
     """Driver-side (min, max) of ``id_col`` from the batch's parquet
-    FOOTER statistics — zero Spark jobs. Returns None when the batch
-    has no file-scan leaves, any footer lacks stats, or pyarrow can't
-    read one (callers fall back to the agg job).
+    FOOTER statistics (`zones.footer_stats`) — zero Spark jobs.
+    Returns None when the batch has no file-scan leaves, any non-empty
+    file's footer lacks the column's stats, or pyarrow can't read one
+    (callers fall back to the agg job).
 
     Soundness: footer stats cover every row of the scanned FILES, so
     the range is a SUPERSET of the post-plan batch's ids (an upstream
     filter can only narrow the true range). Every consumer tolerates a
-    superset: pruned reads open more files (never fewer), zone tags
-    get wider ranges (can only under-skip). (0, 0) rows across all
-    footers proves an empty batch; a non-empty footer with an empty
-    post-filter batch just wastes one no-op cycle."""
+    superset: pruned reads open more files (never fewer). (None, None)
+    — zero rows across all footers — proves an empty batch; a
+    non-empty footer with an empty post-filter batch just wastes one
+    no-op cycle."""
     from urllib.parse import unquote, urlparse
 
     try:
@@ -751,42 +744,25 @@ def _footer_id_range(
         return None
     if not uris:
         return None
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:
-        return None
-    lo = hi = None
-    total_rows = 0
+    paths = []
     for uri in uris:
         p = urlparse(uri)
         if p.scheme not in ("", "file"):
             return None  # remote FS: let Spark do it
-        path = unquote(p.path or uri)
-        try:
-            md = pq.ParquetFile(path).metadata
-        except Exception:
-            return None
-        try:
-            idx = md.schema.names.index(id_col)
-        except ValueError:
-            return None
-        total_rows += md.num_rows
-        for g in range(md.num_row_groups):
-            col = md.row_group(g).column(idx)
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                if md.row_group(g).num_rows:
-                    return None  # rows without stats: can't bound
-                continue
-            if lo is None or st.min < lo:
-                lo = st.min
-            if hi is None or st.max > hi:
-                hi = st.max
-    if total_rows == 0:
-        return (None, None)  # provably empty batch
-    if lo is None:
-        return None
-    return lo, hi
+        paths.append(unquote(p.path or uri))
+    stats = footer_stats("", paths)
+    if len(stats) != len(paths):
+        return None  # a footer pyarrow could not read
+    lo = hi = None
+    for st in stats.values():
+        if not st["rows"]:
+            continue
+        z = st["cols"].get(id_col)
+        if z is None or z[0] is None:
+            return None  # rows without usable stats: can't bound
+        lo = z[0] if lo is None else min(lo, z[0])
+        hi = z[1] if hi is None else max(hi, z[1])
+    return lo, hi  # (None, None): every file is empty
 
 
 def _batch_id_range(batch: DataFrame, id_col: str) -> tuple[int, int]:
@@ -934,15 +910,9 @@ def _dedup_ingest(
         landed = _load_catalog_pruned(spark, out_path, id_col, lo, hi)
         if landed is not None:
             kept = kept.join(landed, [id_col], "left_anti")
-        band_ranges: dict = {id_col: (lo, hi)}
-        probe = getattr(update_fn, "last_probe", None)
-        if probe and "bkey" in probe:
-            keys = probe["bkey"][1]
-            band_ranges["bkey"] = (keys[0], keys[-1])
         # ONE write job for the landing AND both deltas (band rows +
-        # seen-ids sidecar); zone maintenance stays DRIVER-SIDE
-        # (superset ranges the batch already knows, tagged on exactly
-        # the files this batch created). The ids delta comes from the
+        # seen-ids sidecar); zone maintenance stays DRIVER-SIDE (the
+        # new files' footer ranges). The ids delta comes from the
         # BATCH (already id-deduped), not from the exploded band delta
         # — no distinct shuffle per batch. A batch doc with no band
         # rows (e.g. sub-shingle text) is still recorded as seen: it
@@ -953,13 +923,10 @@ def _dedup_ingest(
         _append_landing_and_deltas(
             kept,
             out_path,
-            {id_col: (lo, hi)},
             delta,
             index_path,
-            band_ranges,
             _minus(batch.select(id_col), seen, id_col),
             ids_path,
-            {id_col: (lo, hi)},
             id_col,
         )
         if auto_compact:
@@ -1010,7 +977,6 @@ def minhash_dedup_ingest(
         probe = _key_set_probe(
             bands_df, "bkey", index_path, overflow_state=probe_state
         )
-        update.last_probe = probe  # zone range for the delta append
         index = _load_band_index(
             spark, index_path, _BAND_SCHEMA, "doc_id", probe
         )
@@ -1062,7 +1028,6 @@ def ann_dedup_ingest(
         probe = _key_set_probe(
             bands_df, "bkey", index_path, overflow_state=probe_state
         )
-        update.last_probe = probe  # zone range for the delta append
         index = _load_band_index(
             spark, index_path, _ANN_SCHEMA, "vec_id", probe
         )
@@ -1222,11 +1187,8 @@ def decontaminate_ingest(
         landed = _load_catalog_pruned(spark, out_path, "doc_id", lo, hi)
         if landed is not None:
             kept = kept.join(landed, ["doc_id"], "left_anti")
-        before = list_parquet_files(out_path)
         kept.write.mode("append").parquet(out_path)
-        record_zone_ranges(
-            out_path, {"doc_id": (lo, hi)}, new_files_since(out_path, before)
-        )
+        update_zones(out_path, ["doc_id"])
 
     return doc_stream.writeStream.foreachBatch(process_batch)
 
@@ -1288,11 +1250,8 @@ def quality_route_ingest(
             out = frame
             if landed is not None:
                 out = out.join(landed, ["doc_id"], "left_anti")
-            before = list_parquet_files(path)
             out.write.mode("append").parquet(path)
-            record_zone_ranges(
-                path, {"doc_id": (lo, hi)}, new_files_since(path, before)
-            )
+            update_zones(path, ["doc_id"])
 
     return doc_stream.writeStream.foreachBatch(process_batch)
 
@@ -1461,9 +1420,8 @@ def substring_dedup_ingest(
         # checkpoint firsts only when the probe below will materialize
         # it anyway (collect + reuse); otherwise leave it fused into
         # the joined checkpoint's plan (no extra pass over the grams)
-        will_probe = (
-            probe_state.get("overflows", 0) < 2
-            and _worth_pruning(index_path)
+        will_probe = not _probe_skipped(probe_state) and _worth_pruning(
+            index_path
         )
         if will_probe:
             firsts = firsts.localCheckpoint(eager=False)
@@ -1475,10 +1433,11 @@ def substring_dedup_ingest(
         # more distinct grams than PRUNE_MAX_KEYS reads the store whole
         # — the documented amortization point (a batch that large
         # amortizes the scan; SCALING.md). After two consecutive
-        # over-cap batches the probe itself is skipped
-        # (overflow_state): distinct gram keys ≈ batch characters here,
-        # so steady-state batches would re-pay a full distinct+collect
-        # pass per batch only to re-learn the overflow.
+        # over-cap batches the probe itself is skipped for
+        # PROBE_SKIP_BATCHES batches (overflow_state): distinct gram
+        # keys ≈ batch characters here, so steady-state batches would
+        # re-pay a full distinct+collect pass per batch only to
+        # re-learn the overflow.
         h_probe = (
             _key_set_probe(
                 firsts, "h1", index_path, overflow_state=probe_state
@@ -1548,11 +1507,8 @@ def substring_dedup_ingest(
         landed = _load_catalog_pruned(spark, out_path, "doc_id", lo, hi)
         if landed is not None:
             kept = kept.join(landed, ["doc_id"], "left_anti")
-        before = list_parquet_files(out_path)
         kept.write.mode("append").parquet(out_path)
-        record_zone_ranges(
-            out_path, {"doc_id": (lo, hi)}, new_files_since(out_path, before)
-        )
+        update_zones(out_path, ["doc_id"])
         # append the delta: grams the store has never seen (or — only
         # off the id-ordered contract — seen with a larger min_doc).
         # On replay every batch gram is already stored with the same
@@ -1563,12 +1519,7 @@ def substring_dedup_ingest(
             F.col("stored_min").isNull()
             | (F.col("min_doc") < F.col("stored_min"))
         ).select("h1", "h2", "min_doc")
-        gram_ranges = (
-            {"h1": (h_probe["h1"][1][0], h_probe["h1"][1][-1])}
-            if h_probe
-            else {}
-        )
-        _append_delta(delta, index_path, zone_ranges=gram_ranges)
+        _append_delta(delta, index_path, zone_cols=["h1"])
         if auto_compact:
             maybe_compact(
                 spark,

@@ -1,6 +1,7 @@
 """Round-11 tests: zone-pruned ingest reads (VERDICT r10 #1 — the
-read-side completion of the linear-cumulative-I/O fix), plus the
-sources.zones manifest machinery they stand on."""
+read-side completion of the linear-cumulative-I/O fix). The
+sources.zones manifest machinery they stand on is tested in
+tests/test_zones.py."""
 
 from __future__ import annotations
 
@@ -19,96 +20,6 @@ def _tmpbase(prefix):
     return tempfile.mkdtemp(
         prefix=prefix, dir="/dev/shm" if os.path.isdir("/dev/shm") else None
     )
-
-
-# ---------------------------------------------------------------- zones
-
-
-def test_zone_manifest_update_and_prune(spark):
-    """update_zones records per-file min/max; select_pruned_files skips
-    exactly the files whose range cannot intersect the probe, always
-    keeps unmanifested files, and always skips zero-row files."""
-    from kommunedata_data_pipeline_spark.sources.zones import (
-        load_zones,
-        select_pruned_files,
-        update_zones,
-    )
-
-    base = _tmpbase("kdp-zones-")
-    try:
-        t = f"{base}/t"
-        spark.range(0, 100).withColumnRenamed("id", "k").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{t}/ver=0")
-        spark.range(1000, 1100).withColumnRenamed("id", "k").coalesce(
-            1
-        ).write.mode("append").parquet(f"{t}/ver=1")
-        zones = update_zones(spark, t, ["k"])
-        assert len(zones) >= 2
-        lows = sorted(v["k"][0] for v in zones.values())
-        assert lows == [0, 1000]
-        # range probe hitting only the first file
-        sel = select_pruned_files(t, {"k": ("range", 50, 60)})
-        assert len(sel) == 1 and "ver=0" in sel[0]
-        # set probe hitting only the second
-        sel = select_pruned_files(t, {"k": ("set", [1005, 1050])})
-        assert len(sel) == 1 and "ver=1" in sel[0]
-        # probe hitting neither
-        assert select_pruned_files(t, {"k": ("range", 500, 600)}) == []
-        # an UNMANIFESTED new file is always read (crash-lag soundness)
-        spark.range(5000, 5100).withColumnRenamed("id", "k").coalesce(
-            1
-        ).write.mode("append").parquet(f"{t}/ver=2")
-        sel = select_pruned_files(t, {"k": ("range", 50, 60)})
-        assert len(sel) == 2  # ver=0 match + conservative ver=2
-        # zero-row file: recorded with a null range, skipped by every probe
-        spark.range(0, 0).withColumnRenamed("id", "k").coalesce(
-            1
-        ).write.mode("append").parquet(f"{t}/ver=3")
-        update_zones(spark, t, ["k"])
-        sel = select_pruned_files(t, {"k": ("range", 0, 10_000_000)})
-        assert not any("ver=3" in s for s in sel)
-        # vanished files drop out of the manifest on the next update
-        shutil.rmtree(f"{t}/ver=1")
-        zones = update_zones(spark, t, ["k"])
-        assert not any("ver=1" in k for k in zones)
-        # nonexistent table
-        assert select_pruned_files(f"{base}/nope", {"k": ("range", 0, 1)}) is None
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_zone_string_keys_and_multi_column(spark):
-    """String (md5-hex-like) zone keys prune lexicographically; multiple
-    probe columns AND together (skip if ANY proves a miss)."""
-    from kommunedata_data_pipeline_spark.sources.zones import (
-        select_pruned_files,
-        update_zones,
-    )
-
-    base = _tmpbase("kdp-zones-str-")
-    try:
-        t = f"{base}/t"
-        spark.createDataFrame(
-            [("aa", 1), ("bb", 2)], "bkey string, doc_id bigint"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{t}/ver=0")
-        spark.createDataFrame(
-            [("xx", 100), ("zz", 200)], "bkey string, doc_id bigint"
-        ).coalesce(1).write.mode("append").parquet(f"{t}/ver=1")
-        update_zones(spark, t, ["bkey", "doc_id"])
-        sel = select_pruned_files(t, {"bkey": ("set", ["ab", "ba"])})
-        assert len(sel) == 1 and "ver=0" in sel[0]
-        # bkey matches ver=1 but doc_id range excludes it -> skipped
-        sel = select_pruned_files(
-            t, {"bkey": ("set", ["yy"]), "doc_id": ("range", 0, 50)}
-        )
-        assert sel == []
-        sel = select_pruned_files(
-            t, {"bkey": ("set", ["xx"]), "doc_id": ("range", 90, 110)}
-        )
-        assert len(sel) == 1 and "ver=1" in sel[0]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ------------------------------------------------- pruned ingest reads

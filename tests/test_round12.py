@@ -1,156 +1,13 @@
-"""Round-12 battery: ADVICE r11 fixes (zone-tag scoping, compaction
-manifest atomicity, retirement-time vacuum, beyond-HEAD raise, no
-session-global AQE toggles) and VERDICT r11 items (anti_join_catalog
-broadcast gate)."""
+"""Round-12 battery: ADVICE r11 fixes (retirement-time vacuum,
+beyond-HEAD raise, no session-global AQE toggles) and VERDICT r11
+items (anti_join_catalog broadcast gate). The zone-manifest tests of
+this round live in tests/test_zones.py."""
 
 import json
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
-
-
-# ------------------------- zones: caller-scoped tagging (ADVICE #1)
-
-
-def test_record_zone_ranges_tags_only_callers_files(spark, tmp_path):
-    """record_zone_ranges must tag ONLY the files the caller names:
-    an unmanifested file some other writer (or a crashed compaction)
-    left behind stays untagged and reads conservatively — the pre-r12
-    tag-everything behavior could stamp a swapped-in base with a
-    batch's narrow range and silently skip real keys."""
-    from kommunedata_data_pipeline_spark.sources.zones import (
-        list_parquet_files,
-        load_zones,
-        record_zone_ranges,
-        select_pruned_files,
-    )
-
-    t = str(tmp_path / "store")
-    # two files with disjoint key ranges
-    spark.createDataFrame([(i,) for i in range(10)], "k bigint").coalesce(
-        1
-    ).write.mode("overwrite").parquet(t + "/a")
-    spark.createDataFrame(
-        [(i,) for i in range(100, 110)], "k bigint"
-    ).coalesce(1).write.mode("overwrite").parquet(t + "/b")
-    files = sorted(list_parquet_files(t))
-    mine = [f for f in files if f.startswith("a")]
-    other = [f for f in files if f.startswith("b")]
-    assert mine and other
-    # caller tags only its own files with its (narrow) range
-    record_zone_ranges(t, {"k": (0, 9)}, mine)
-    zones = load_zones(t)
-    assert set(zones) == set(mine)  # the other file stays unmanifested
-    # a probe far outside the tagged range: the tagged file is skipped,
-    # the unmanifested one is read conservatively
-    sel = select_pruned_files(t, {"k": ("range", 105, 106)})
-    rels = {os.path.relpath(p, t) for p in sel}
-    assert rels == set(other)
-    # the old failure mode cannot occur: tagging with a list never
-    # touches files outside it, so probing keys the OTHER file holds
-    # still reads it
-    rows = spark.read.parquet(
-        *select_pruned_files(t, {"k": ("set", [100, 108])})
-    ).collect()
-    assert {r["k"] for r in rows} >= {100, 108}
-
-
-def test_compaction_installs_manifest_atomically_with_swap(spark, tmp_path):
-    """compact_index writes the rebuilt _zones.json INTO the staged dir
-    before the swap: immediately after compaction the base is fully
-    manifested (no window where a replayed append could mis-tag it),
-    and a deliberately removed manifest leaves later appends unable to
-    tag base files (they only tag their own ver=N files)."""
-    from kommunedata_data_pipeline_spark.sources.zones import (
-        list_parquet_files,
-        load_zones,
-        select_pruned_files,
-    )
-    from kommunedata_data_pipeline_spark.streaming import ingest
-
-    t = str(tmp_path / "band")
-    for lo in (0, 200):
-        ingest._append_delta(
-            spark.createDataFrame(
-                [(i, [i], 0, f"b{i}") for i in range(lo, lo + 50)],
-                ingest._BAND_SCHEMA,
-            ),
-            t,
-            zone_ranges={"doc_id": (lo, lo + 49)},
-        )
-    ingest.compact_band_index(spark, t)
-    zones = load_zones(t)
-    files = list_parquet_files(t)
-    # every base file is manifested the instant the swap lands
-    assert files and set(zones) == set(files)
-    # simulate the crash window the fix removes: manifest gone
-    os.remove(os.path.join(t, "_zones.json"))
-    ingest._append_delta(
-        spark.createDataFrame(
-            [(500, [500], 0, "b500")], ingest._BAND_SCHEMA
-        ),
-        t,
-        zone_ranges={"doc_id": (500, 500), "bkey": ("b500", "b500")},
-    )
-    zones = load_zones(t)
-    base_files = [f for f in list_parquet_files(t) if f.startswith("ver=0")]
-    assert base_files
-    # base files remain unmanifested (conservative reads), NOT stamped
-    # with the new batch's narrow range
-    assert not any(f in zones for f in base_files)
-    sel = select_pruned_files(t, {"doc_id": ("range", 0, 10)})
-    rels = {os.path.relpath(p, t) for p in sel}
-    assert set(base_files) <= rels
-
-
-def test_landing_append_tags_only_new_files(spark, tmp_path):
-    """The landed-sink zone tagging diffs the listing around the append:
-    a crashed earlier landing's unmanifested files keep reading
-    conservatively instead of inheriting a later batch's id range —
-    otherwise a replay of the crashed batch could re-land (duplicates)."""
-    from kommunedata_data_pipeline_spark.sources.zones import (
-        list_parquet_files,
-        load_zones,
-        select_pruned_files,
-    )
-    from kommunedata_data_pipeline_spark.streaming.ingest import (
-        run_writer_available_now,
-        minhash_dedup_ingest,
-    )
-
-    base = str(tmp_path / "ing")
-    out, idx = f"{base}/landed", f"{base}/idx"
-
-    # batch 1 lands docs 1-3, then its zone manifest "is lost" (crash
-    # between the append and the manifest write)
-    def land(rows, ck):
-        src = f"{base}/src_{ck}"
-        spark.createDataFrame(rows, "doc_id bigint, text string").write.mode(
-            "overwrite"
-        ).parquet(src)
-        stream = spark.readStream.schema("doc_id bigint, text string").parquet(src)
-        run_writer_available_now(
-            minhash_dedup_ingest(stream, idx, out), f"{base}/ck_{ck}"
-        )
-
-    land([(i, f"unique text number {i} " * 5) for i in (1, 2, 3)], "b1")
-    os.remove(os.path.join(out, "_zones.json"))
-    first_files = set(list_parquet_files(out))
-    # batch 2 lands docs 100+ — must NOT tag batch 1's files
-    land([(i, f"other fresh text {i} " * 5) for i in (100, 101)], "b2")
-    zones = load_zones(out)
-    assert not any(f in zones for f in first_files)
-    # probing batch 1's id range still reads its (unmanifested) files
-    sel = select_pruned_files(out, {"doc_id": ("range", 1, 3)})
-    rels = {os.path.relpath(p, out) for p in sel}
-    assert first_files <= rels
-    # and a replay of batch 1 lands zero extra rows
-    land([(i, f"unique text number {i} " * 5) for i in (1, 2, 3)], "b1r")
-    got = spark.read.parquet(out).groupBy("doc_id").count().collect()
-    assert all(r["count"] == 1 for r in got)
-    shutil.rmtree(base, ignore_errors=True)
 
 
 # ------------------------- AQE: explicit-N repartition is never coalesced

@@ -146,13 +146,10 @@ def test_fused_append_visibility_order_land_band_ids(spark):
         ing._append_landing_and_deltas(
             kept,
             f"{base}/landed",
-            {"doc_id": (1, 1)},
             band,
             f"{base}/idx",
-            {"doc_id": (1, 1)},
             ids,
             f"{base}/idx_ids",
-            {"doc_id": (1, 1)},
             "doc_id",
         )
     finally:
@@ -192,13 +189,10 @@ def test_fused_append_empty_sides_append_nothing(spark):
         ing._append_landing_and_deltas(
             kept_empty,
             f"{base}/landed",
-            {"doc_id": (7, 7)},
             band_empty,
             f"{base}/idx",
-            {"doc_id": (7, 7)},
             ids,
             f"{base}/idx_ids",
-            {"doc_id": (7, 7)},
             "doc_id",
         )
         assert not os.path.isdir(f"{base}/landed") or not any(
@@ -320,8 +314,11 @@ def test_dup_span_gram_stream_pinned_once(spark):
 
 def test_key_set_probe_overflow_memory(spark, tmp_path):
     """After two consecutive over-cap batches the probe is skipped
-    without spending its collect job; a batch that fits resets the
-    state and probing resumes."""
+    without spending its collect job for PROBE_SKIP_BATCHES batches;
+    the next batch probes again — an overflow re-arms the skip, a fit
+    resets the state and probing resumes on every batch."""
+    from pyspark.sql.classic.dataframe import DataFrame as CDF
+
     store = str(tmp_path / "idx")
     # enough files that _worth_pruning is True
     spark.range(200).select(
@@ -331,42 +328,39 @@ def test_key_set_probe_overflow_memory(spark, tmp_path):
     big = spark.range(0, 1000).select(F.col("id").alias("k"))
     small = spark.range(0, 10).select(F.col("id").alias("k"))
     state: dict = {}
+    # count collect jobs: patch the CLASSIC DataFrame class (Spark 4
+    # instances override the pyspark.sql.DataFrame ABC, so patching the
+    # ABC would count nothing)
+    calls = {"n": 0}
+    real = CDF.collect
+
+    def spy(self):
+        calls["n"] += 1
+        return real(self)
+
+    def probe(frame):
+        before = calls["n"]
+        got = ing._key_set_probe(frame, "k", store, overflow_state=state)
+        return got, calls["n"] - before
+
     old_cap = ing.PRUNE_MAX_KEYS
+    CDF.collect = spy
     try:
         ing.PRUNE_MAX_KEYS = 100
-        assert (
-            ing._key_set_probe(big, "k", store, overflow_state=state) is None
-        )
-        assert state["overflows"] == 1
-        assert (
-            ing._key_set_probe(big, "k", store, overflow_state=state) is None
-        )
-        assert state["overflows"] == 2
-        # third call: skipped up-front (collect not spent) — pin by
-        # making collect impossible to satisfy cheaply: monkeypatch
-        # patch the CLASSIC DataFrame class (Spark 4: instances override
-        # the pyspark.sql.DataFrame ABC — verify-skill r9 gotcha)
-        from pyspark.sql.classic.dataframe import DataFrame as CDF
-
-        calls = {"n": 0}
-        real = CDF.collect
-
-        def spy(self):
-            calls["n"] += 1
-            return real(self)
-
-        CDF.collect = spy
-        try:
-            assert (
-                ing._key_set_probe(big, "k", store, overflow_state=state)
-                is None
-            )
-            assert calls["n"] == 0
-        finally:
-            CDF.collect = real
-        # a fitting batch resets the state once probing resumes
-        state["overflows"] = 1
-        probe = ing._key_set_probe(small, "k", store, overflow_state=state)
-        assert probe is not None and state["overflows"] == 0
+        assert probe(big) == (None, 1) and state["overflows"] == 1
+        assert probe(big) == (None, 1) and state["overflows"] == 2
+        # skipped up-front, collect not spent
+        for _ in range(ing.PROBE_SKIP_BATCHES):
+            assert probe(big) == (None, 0)
+        # the skip expires: one more probe, which overflows and re-arms
+        assert probe(big) == (None, 1)
+        for _ in range(ing.PROBE_SKIP_BATCHES):
+            assert probe(small) == (None, 0)
+        # the next probe fits: state resets and every batch probes
+        got, n = probe(small)
+        assert got is not None and n == 1 and not state.get("overflows")
+        got, n = probe(small)
+        assert got == {"k": ("set", list(range(10)))} and n == 1
     finally:
+        CDF.collect = real
         ing.PRUNE_MAX_KEYS = old_cap
