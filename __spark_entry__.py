@@ -2790,6 +2790,7 @@ def _maybe_register_tws() -> None:
         oracle. min/max are untouched input doubles (bit-identical both
         engines); the sum is rounded per the parity rules."""
         from kommunedata_data_pipeline_spark.streaming.stateful import (
+            TWS_STATE_PARTITIONS,
             enable_tws_workers,
             rocksdb_state_store,
             user_value_stats_tws,
@@ -2802,18 +2803,11 @@ def _maybe_register_tws() -> None:
         enable_tws_workers(spark)
         with rocksdb_state_store(spark):
             s = user_value_stats_tws(read_events_stream(spark, sf_dir))
-            # 8 state partitions (the Python-stateful default): measured
-            # at sf0.1 (1500 keys) 8 ≈ 3.0 s steady vs 2 ≈ 4.9 s — the
-            # per-key state round-trips want worker parallelism more
-            # than RocksDB wants fewer instances. KDP_TWS_PARTS
-            # overrides for tuning runs (scripts/tws_tune.py).
-            import os as _os
-
             run_to_memory(
                 s,
                 "q_stream_tws_sink",
                 output_mode="update",
-                shuffle_partitions=int(_os.environ.get("KDP_TWS_PARTS", "8")),
+                shuffle_partitions=TWS_STATE_PARTITIONS,
             )
         return spark.table("q_stream_tws_sink")
 
@@ -2853,6 +2847,7 @@ def _maybe_register_tws_topk() -> None:
         real deployment amortizes the same cost over the stream's
         lifetime, not per run)."""
         from kommunedata_data_pipeline_spark.streaming.stateful import (
+            TWS_STATE_PARTITIONS,
             enable_tws_workers,
             rocksdb_state_store,
             user_topk_tws,
@@ -2871,13 +2866,11 @@ def _maybe_register_tws_topk() -> None:
                     & (F.col("user_id") % 5 == 0)
                 )
             )
-            import os as _os
-
             run_to_memory(
                 s,
                 "q_stream_tws_topk_sink",
                 output_mode="update",
-                shuffle_partitions=int(_os.environ.get("KDP_TWS_PARTS", "8")),
+                shuffle_partitions=TWS_STATE_PARTITIONS,
             )
         return spark.table("q_stream_tws_topk_sink")
 
@@ -2911,9 +2904,8 @@ def _maybe_register_tws_mapstate() -> None:
         as q_stream_tws_topk: each touched (user, type) pair is a
         synchronous get+update round trip per batch, a cost a real
         deployment amortizes over the stream lifetime."""
-        import os as _os
-
         from kommunedata_data_pipeline_spark.streaming.stateful import (
+            TWS_STATE_PARTITIONS,
             enable_tws_workers,
             rocksdb_state_store,
             user_type_counts_tws,
@@ -2936,7 +2928,7 @@ def _maybe_register_tws_mapstate() -> None:
                 s,
                 "q_stream_tws_mapstate_sink",
                 output_mode="update",
-                shuffle_partitions=int(_os.environ.get("KDP_TWS_PARTS", "8")),
+                shuffle_partitions=TWS_STATE_PARTITIONS,
             )
         return spark.table("q_stream_tws_mapstate_sink")
 
@@ -2984,9 +2976,8 @@ def _maybe_register_tws_session_parity() -> None:
         join and the driver's row-count/hash check goes red. The oracle
         is the batch gaps-and-islands SQL restricted to sessions closed
         before the final watermark (= max cohort ts; watermark delay 0)."""
-        import os as _os
-
         from kommunedata_data_pipeline_spark.streaming.stateful import (
+            TWS_STATE_PARTITIONS,
             enable_tws_workers,
             rocksdb_state_store,
             session_close_tws,
@@ -3023,7 +3014,7 @@ def _maybe_register_tws_session_parity() -> None:
                 s,
                 "q_tws_sess_par_sink",
                 output_mode="append",
-                shuffle_partitions=int(_os.environ.get("KDP_TWS_PARTS", "8")),
+                shuffle_partitions=TWS_STATE_PARTITIONS,
             )
         sw = (
             cohort(read_events_stream(spark, sf_dir))

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import time
 
@@ -23,9 +22,12 @@ from kommunedata_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
 def prepare_session(sf_dir: str):
-    """The bench session: data-sized shuffle partitions, Python-worker +
-    TWS warmups — one-off JVM/worker-pool costs that would otherwise be
-    billed to whichever query alphabetically sorts first. Shared by
+    """The bench session: data-sized shuffle partitions, warmed with
+    what every query uses (the table scans and the Python worker pool),
+    so those one-off JVM/worker-pool costs are not billed to whichever
+    query alphabetically sorts first. A path only some queries take
+    (transformWithState) is not warmed: its first use falls on an
+    attempt that `time_one`'s best-of-N drops. Shared by
     `main` and by scripts/judge_ratio.py --interleaved (the
     cross-engine A/B must time queries under the SAME session shape
     the recorded bench used).
@@ -77,71 +79,7 @@ def prepare_session(sf_dir: str):
         for pdf in it:
             yield pd.DataFrame({"id": pdf["id"]})
 
-    spark.range(256).repartition(
-        int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    ).mapInPandas(_warm, "id long").count()
-
-    # transformWithState warm-up: the first TWS query in a session pays a
-    # one-off ~4 s of JVM class loading (RocksDB state store provider +
-    # state server) on top of the per-query stream floor — run a 2-row
-    # TWS stream untimed so that cost isn't billed to q_stream_tws.
-    # enable_tws_workers comes FIRST so the suite keeps a single Python
-    # worker-pool env (it mutates sc.environment, which keys the pool).
-    from kommunedata_data_pipeline_spark.streaming.stateful import tws_available
-
-    if tws_available():
-        import tempfile
-
-        from kommunedata_data_pipeline_spark.streaming.stateful import (
-            enable_tws_workers,
-            rocksdb_state_store,
-            user_topk_tws,
-            user_value_stats_tws,
-        )
-        from kommunedata_data_pipeline_spark.streaming.windows import run_to_memory
-
-        enable_tws_workers(spark)
-        warm_dir = tempfile.mkdtemp(
-            prefix="tws-warm-",
-            dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-        )
-        try:
-            spark.createDataFrame(
-                [(i, float(i), i) for i in range(64)],
-                "user_id long, value double, event_id long",
-            ).coalesce(1).write.mode("overwrite").parquet(warm_dir)
-            warm_stream = spark.readStream.schema(
-                "user_id long, value double, event_id long"
-            ).parquet(warm_dir)
-            with rocksdb_state_store(spark):
-                # warm BOTH processor shapes at the real partition count:
-                # the first TWS query per (processor, partitioning) pays
-                # JVM class loads + RocksDB instance + Python driver-
-                # worker JIT that later runs don't (measured ~5.7 s first
-                # vs ~3.3 s steady at sf0.1, scripts/tws_tune.py) — run
-                # each untimed so the timed attempts sit at steady state.
-                run_to_memory(
-                    user_value_stats_tws(
-                        warm_stream.select("user_id", "value")
-                    ),
-                    "tws_warm",
-                    output_mode="update",
-                    shuffle_partitions=int(
-                        os.environ.get("KDP_TWS_PARTS", "8")
-                    ),
-                )
-                run_to_memory(
-                    user_topk_tws(warm_stream),
-                    "tws_warm_topk",
-                    output_mode="update",
-                    shuffle_partitions=int(
-                        os.environ.get("KDP_TWS_PARTS", "8")
-                    ),
-                )
-        finally:
-            # /dev/shm is RAM — leaking a parquet dir + RocksDB
-            # checkpoint per bench run would eat memory across runs
-            shutil.rmtree(warm_dir, ignore_errors=True)
+    spark.range(256).repartition(cpus).mapInPandas(_warm, "id long").count()
     return spark
 
 

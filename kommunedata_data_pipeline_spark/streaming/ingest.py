@@ -113,14 +113,24 @@ WRITE_LOG: list | None = None
 SMALL_DELTA_FOLD_BYTES = 8 * 1024 * 1024
 
 
+def _rebalanced(df: DataFrame) -> DataFrame:
+    """``df`` REBALANCE-hinted when its own session runs AQE, else
+    unchanged. With AQE on, the hint sizes the write's output files to
+    the advisory target, so a tiny delta lands as ONE file. With AQE
+    off, Spark drops the hint with a `HintErrorLogger` warning on every
+    write and the delta lands as shuffle-partition-count files (folded
+    by `_fold_small_delta_files` when small)."""
+    aqe = df.sparkSession.conf.get("spark.sql.adaptive.enabled")
+    return df.hint("rebalance") if aqe.lower() == "true" else df
+
+
 def _fold_small_delta_files(staged: str) -> None:
     """Fold a just-staged delta dir into ONE parquet file when the
     whole delta is tiny (< SMALL_DELTA_FOLD_BYTES) — driver-side
     pyarrow concat, zero Spark jobs, bounded bytes. Why: the delta
-    writes are REBALANCE-hinted so AQE sizes output files at scale,
-    but with AQE off (any sub-10 GB run, incl. the bench regime) the
-    hint is a no-op and every micro-batch delta lands as
-    shuffle-partition-count near-empty files — inflating every later
+    writes are REBALANCE-hinted only under AQE (`_rebalanced`), so with
+    AQE off (any sub-10 GB bench session) every micro-batch delta lands
+    as shuffle-partition-count near-empty files — inflating every later
     store listing/open and tripping the `_worth_pruning` file-count
     gate with files that carry no skippable range. Runs on the staged
     dir BEFORE the visibility rename, so a crash mid-fold leaves only
@@ -272,15 +282,17 @@ def _append_delta(
     manifest update leaves the delta unmanifested — read conservatively
     by every probe, never lost, and recorded by the next update.
 
-    The write is REBALANCE-hinted (the optimized-write discipline): AQE
-    sizes the output partitions to the advisory target, so a tiny
-    micro-batch delta lands as ONE file (not shuffle-partition-count
-    near-empty files — fewer files to list, manifest and open on every
-    later batch) while a large backlog delta still fans out to
-    advisory-sized files. Costs one delta-sized shuffle; saves the
-    per-file open/list on every subsequent read of the store."""
+    Under AQE the write is REBALANCE-hinted (`_rebalanced`, the
+    optimized-write discipline): AQE sizes the output partitions to the
+    advisory target, so a tiny micro-batch delta lands as ONE file (not
+    shuffle-partition-count near-empty files — fewer files to list,
+    manifest and open on every later batch) while a large backlog delta
+    still fans out to advisory-sized files. Costs one delta-sized
+    shuffle; saves the per-file open/list on every subsequent read of
+    the store. Without AQE Spark would drop the hint, so none is given
+    and `_fold_small_delta_files` folds a tiny delta into one file."""
     tmp = f"{index_path}__delta_{uuid.uuid4().hex[:8]}"
-    delta.hint("rebalance").write.mode("overwrite").parquet(tmp)
+    _rebalanced(delta).write.mode("overwrite").parquet(tmp)
     _fold_small_delta_files(tmp)
     os.makedirs(index_path, exist_ok=True)
     dest = os.path.join(index_path, f"ver={_next_ver(index_path)}")
@@ -356,7 +368,7 @@ def _append_landing_and_deltas(
     )
     tmp = f"{band_path}__delta3_{uuid.uuid4().hex[:8]}"
     (
-        combined.hint("rebalance")
+        _rebalanced(combined)
         .write.partitionBy("__store")
         .mode("overwrite")
         .parquet(tmp)

@@ -29,6 +29,12 @@ TWS_OUT_SCHEMA = (
 )
 TWS_STATE_SCHEMA = "n bigint, total double, vmin double, vmax double"
 
+# State partitions of every transformWithState query (the Python-stateful
+# default): measured at sf0.1 (1500 keys) 8 ≈ 3.0 s steady vs 2 ≈ 4.9 s —
+# the per-key state round-trips want worker parallelism more than RocksDB
+# wants fewer instances.
+TWS_STATE_PARTITIONS = 8
+
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )

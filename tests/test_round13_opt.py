@@ -1,6 +1,7 @@
 """Round-13 optimization internals: the fused band+ids delta append
 (one write job per batch, band-visible-before-ids), the driver-side
-small-delta file fold, and the key-probe overflow memory.
+small-delta file fold, the AQE-only rebalance hint, and the key-probe
+overflow memory.
 """
 
 from __future__ import annotations
@@ -250,6 +251,38 @@ def test_fold_small_delta_files_roundtrip(spark, tmp_path):
     assert (
         len([f for f in os.listdir(d2) if f.endswith(".parquet")]) == 4
     )
+
+
+def test_append_delta_rebalances_only_under_aqe(spark, tmp_path, monkeypatch):
+    """With AQE on, the rebalance hint alone lands a tiny multi-partition
+    delta as ONE file (the small-delta fold is switched off here); with
+    AQE off no hint is given, the delta keeps its partition files, and
+    the store reads back the same rows either way."""
+    monkeypatch.setattr(ing, "SMALL_DELTA_FOLD_BYTES", 0)
+    delta = spark.range(200).selectExpr("id AS doc_id", "id % 7 AS k")
+    delta = delta.repartition(8)
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    rows = {}
+    try:
+        for aqe in ("true", "false"):
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            store = str(tmp_path / f"aqe_{aqe}")
+            ing._append_delta(delta, store)
+            files = [
+                f
+                for f in os.listdir(os.path.join(store, "ver=0"))
+                if f.endswith(".parquet")
+            ]
+            assert (len(files) == 1) == (aqe == "true"), (aqe, files)
+            rows[aqe] = sorted(
+                tuple(r)
+                for r in ing._load_index(
+                    spark, store, "doc_id bigint, k bigint"
+                ).collect()
+            )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
+    assert rows["true"] == rows["false"] == [(i, i % 7) for i in range(200)]
 
 
 def test_dup_clusters_edge_hint_skips_strategy_count(spark):
