@@ -1236,8 +1236,8 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # a deleted path); localCheckpoint is cluster-side, no driver
         # materialization
         landed = (
-            spark.read.parquet(f"{base}/landed")
-            .select("doc_id")
+            spark.read.schema("doc_id bigint")
+            .parquet(f"{base}/landed")
             .localCheckpoint(eager=True)
         )
     finally:
@@ -1315,8 +1315,8 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             durations_key="q_stream_ann_ingest_sink",
         )
         landed = (
-            spark.read.parquet(f"{base}/landed")
-            .select("vec_id")
+            spark.read.schema("vec_id bigint")
+            .parquet(f"{base}/landed")
             .localCheckpoint(eager=True)
         )
     finally:
@@ -9721,6 +9721,7 @@ def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from kommunedata_data_pipeline_spark.streaming.ingest import (
+        DECONTAMINATE_LANDED_SCHEMA,
         decontaminate_ingest,
         run_writer_available_now,
     )
@@ -9745,7 +9746,8 @@ def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             durations_key="q_stream_decontaminate_sink",
         )
         landed = (
-            spark.read.parquet(f"{base}/landed")
+            spark.read.schema(DECONTAMINATE_LANDED_SCHEMA)
+            .parquet(f"{base}/landed")
             .localCheckpoint(eager=True)
         )
     finally:
@@ -10405,6 +10407,7 @@ def q_stream_substring_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from kommunedata_data_pipeline_spark.streaming.ingest import (
+        SUBSTRING_LANDED_SCHEMA,
         run_writer_available_now,
         substring_dedup_ingest,
     )
@@ -10433,7 +10436,8 @@ def q_stream_substring_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             durations_key="q_stream_substring_ingest_sink",
         )
         landed = (
-            spark.read.parquet(f"{base}/landed")
+            spark.read.schema(SUBSTRING_LANDED_SCHEMA)
+            .parquet(f"{base}/landed")
             .localCheckpoint(eager=True)
         )
     finally:
@@ -12436,6 +12440,8 @@ def q_stream_quality_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from kommunedata_data_pipeline_spark.streaming.ingest import (
+        QUALITY_KEPT_SCHEMA,
+        QUALITY_REJECTS_SCHEMA,
         quality_route_ingest,
         run_writer_available_now,
     )
@@ -12460,7 +12466,8 @@ def q_stream_quality_route(spark: SparkSession, sf_dir: str) -> DataFrame:
             durations_key="q_stream_quality_route_sink",
         )
         kept = (
-            spark.read.parquet(f"{base}/kept")
+            spark.read.schema(QUALITY_KEPT_SCHEMA)
+            .parquet(f"{base}/kept")
             .select(
                 "doc_id",
                 "n_chars",
@@ -12468,11 +12475,15 @@ def q_stream_quality_route(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(None).cast("string").alias("reason"),
             )
         )
-        rejects = spark.read.parquet(f"{base}/rejects").select(
-            "doc_id",
-            "n_chars",
-            F.lit("dead_letter").alias("route"),
-            "reason",
+        rejects = (
+            spark.read.schema(QUALITY_REJECTS_SCHEMA)
+            .parquet(f"{base}/rejects")
+            .select(
+                "doc_id",
+                "n_chars",
+                F.lit("dead_letter").alias("route"),
+                "reason",
+            )
         )
         routed = kept.unionAll(rejects).localCheckpoint(eager=True)
     finally:
@@ -13714,6 +13725,7 @@ def q_stream_table_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from kommunedata_data_pipeline_spark.sources.table_stream import (
+        CHANGE_COLS,
         read_table_changes_stream,
     )
     from kommunedata_data_pipeline_spark.sources import sinks
@@ -13779,7 +13791,8 @@ def q_stream_table_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         except Exception:
             pass
         res = (
-            spark.read.parquet(os.path.join(base, "out"))
+            spark.read.schema(f"n_chars bigint, {CHANGE_COLS}")
+            .parquet(os.path.join(base, "out"))
             .groupBy(
                 F.col("_commit_version").cast("int").alias("version"),
                 F.col("_change_type").alias("change_type"),

@@ -126,20 +126,24 @@ def _ensure_parallel(df: DataFrame) -> DataFrame:
     as wide as the default parallelism (the 100 TB case — real table
     scans arrive in thousands of partitions).
 
-    Cost note (ADVICE r6): ``df.rdd`` compiles a physical plan eagerly.
-    Callers invoke this on the RAW documents input (a scan-depth plan),
-    so the compile is one scan node, not the operator's full plan; the
-    per-call driver cost is milliseconds. Under Spark Connect the RDD
-    API does not exist — there the width is unobservable, so we spread
-    unconditionally: the repartition shuffles only the narrow
-    pre-explode rows (bounded by the input, never the exploded output)
-    and a redundant spread of an already-wide input costs one narrow
-    shuffle, while a missed spread of a 1-partition input serializes
-    the whole explode."""
+    Cost note (ADVICE r6): the width is read from the PLANNED output
+    partitioning when the plan knows it (an explicit repartition, as
+    `readers.load_table` puts on the fact tables) — ``df.rdd`` on such
+    a plan runs its shuffle under AQE (one wasted job per call, at
+    build time). Otherwise (a scan) ``df.rdd`` compiles the scan-depth
+    plan without running anything; callers invoke this on the RAW
+    documents input, so the per-call driver cost is milliseconds.
+    Under Spark Connect neither exists — there the width is
+    unobservable, so we spread unconditionally: the repartition
+    shuffles only the narrow pre-explode rows (bounded by the input,
+    never the exploded output) and a redundant spread of an
+    already-wide input costs one narrow shuffle, while a missed spread
+    of a 1-partition input serializes the whole explode."""
     spark = df.sparkSession
     try:
         target = spark.sparkContext.defaultParallelism
-        width = df.rdd.getNumPartitions()
+        planned = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+        width = planned.numPartitions() or df.rdd.getNumPartitions()
     except Exception:  # Spark Connect: no sparkContext / .rdd
         return df.repartition(
             int(spark.conf.get("spark.sql.shuffle.partitions", "200"))

@@ -31,6 +31,7 @@ from ..operators.relational import (
     filter_municipality,
     per_group_limit,
 )
+from ..sources.readers import load_table
 
 
 @dataclass
@@ -86,10 +87,10 @@ def flagship_meetings_to_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter (P2) → dedup (D1) → anti-join vs catalog (J2) → per-group
     limit (W1/W2) → canonical doc_key (F11).
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders, customer, nation, lineitem = (
+        load_table(spark, sf_dir, t)
+        for t in ("orders", "customer", "nation", "lineitem")
+    )
 
     config = customer.join(
         F.broadcast(nation), customer.c_nationkey == nation.n_nationkey

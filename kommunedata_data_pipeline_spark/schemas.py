@@ -86,16 +86,81 @@ DOCUMENT_BLOBS = T.StructType(
 )
 
 # --- star-schema test tables (TESTDATA.md / FIXTURES.md A) -----------------
+#
+# Declared, not inferred: `sources.readers.load_table` hands these to
+# the parquet reader, so building a query launches no schema-inference
+# job (one ~75 ms footer-reading job per table read otherwise). Each
+# equals what Spark infers from the testdata's and perfbench's footers
+# (pytest-pinned); a file that disagrees fails its scan naming the
+# column (PARQUET_COLUMN_DATA_TYPE_MISMATCH) — it is never silently
+# re-typed. Timestamps are MICROS without timezone, i.e. TIMESTAMP_NTZ.
 
-STAR_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+
+def _nullable(*fields: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(n, t, True) for n, t in fields])
+
+
+_I, _L, _D, _S = T.IntegerType(), T.LongType(), T.DoubleType(), T.StringType()
+_NTZ = T.TimestampNTZType()
+
+STAR_SCHEMAS: dict[str, T.StructType] = {
+    "region": _nullable(("r_regionkey", _I), ("r_name", _S)),
+    "nation": _nullable(("n_nationkey", _I), ("n_name", _S), ("n_regionkey", _I)),
+    "customer": _nullable(
+        ("c_custkey", _L),
+        ("c_name", _S),
+        ("c_nationkey", _I),
+        ("c_acctbal", _D),
+        ("c_mktsegment", _S),
+    ),
+    "supplier": _nullable(
+        ("s_suppkey", _L), ("s_name", _S), ("s_nationkey", _I), ("s_acctbal", _D)
+    ),
+    "part": _nullable(
+        ("p_partkey", _L),
+        ("p_name", _S),
+        ("p_brand", _S),
+        ("p_type", _S),
+        ("p_size", _I),
+        ("p_retailprice", _D),
+    ),
+    "orders": _nullable(
+        ("o_orderkey", _L),
+        ("o_custkey", _L),
+        ("o_orderstatus", _S),
+        ("o_totalprice", _D),
+        ("o_orderdate", _NTZ),
+        ("o_orderpriority", _S),
+    ),
+    "lineitem": _nullable(
+        ("l_orderkey", _L),
+        ("l_partkey", _L),
+        ("l_suppkey", _L),
+        ("l_linenumber", _I),
+        ("l_quantity", _D),
+        ("l_extendedprice", _D),
+        ("l_discount", _D),
+        ("l_tax", _D),
+        ("l_returnflag", _S),
+        ("l_linestatus", _S),
+        ("l_shipdate", _NTZ),
+    ),
+    # ts is stored naive (NTZ); load_table and read_events_stream cast
+    # it to session-zone TIMESTAMP
+    "events": _nullable(
+        ("event_id", _L),
+        ("ts", _NTZ),
+        ("user_id", _L),
+        ("event_type", _S),
+        ("value", _D),
+        ("props", _S),
+    ),
+    "documents": _nullable(
+        ("doc_id", _L), ("text", _S), ("lang", _S), ("source", _S), ("n_chars", _L)
+    ),
+    "embeddings": _nullable(
+        ("vec_id", _L), ("embedding", T.ArrayType(T.FloatType(), True)), ("label", _I)
+    ),
+}
+
+STAR_TABLES = tuple(STAR_SCHEMAS)

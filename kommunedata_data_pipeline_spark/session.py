@@ -9,6 +9,17 @@ for the 100 TB design point:
 - Arrow on for every pandas-UDF boundary.
 - Session timezone pinned UTC so timestamp semantics match the DuckDB
   oracle and are cluster-invariant.
+- PySpark's DataFrame debugging off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every Column/DataFrame API call made while building a query walks
+  the Python stack and sets and clears a call-site origin in the JVM
+  over py4j — hundreds of round trips per query build, about half a
+  second for the ten perfbench batch queries. The trade-off: analysis
+  and runtime error messages lose the Python call-site context (the
+  file and line of the DataFrame call that built the failing
+  expression); the Spark-side error itself is unchanged. PySpark reads
+  the flag once per process and caches it, so it is set here, when the
+  session is built, not later with ``spark.conf.set``.
 """
 
 from __future__ import annotations
@@ -37,8 +48,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # events.parquet carries TIMESTAMP(NANOS); read as long + convert
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         # Fetch UDFs are side-effecting; never speculatively re-execute them

@@ -79,7 +79,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.zones import (
-    footer_stats,
     list_parquet_files,
     select_pruned_files,
     update_zones,
@@ -732,60 +731,12 @@ def _key_set_probe(
     return {key_col: ("set", sorted(r[0] for r in rows))}
 
 
-def _footer_id_range(
-    batch: DataFrame, id_col: str
-) -> tuple[int, int] | None:
-    """Driver-side (min, max) of ``id_col`` from the batch's parquet
-    FOOTER statistics (`zones.footer_stats`) — zero Spark jobs.
-    Returns None when the batch has no file-scan leaves, any non-empty
-    file's footer lacks the column's stats, or pyarrow can't read one
-    (callers fall back to the agg job).
-
-    Soundness: footer stats cover every row of the scanned FILES, so
-    the range is a SUPERSET of the post-plan batch's ids (an upstream
-    filter can only narrow the true range). Every consumer tolerates a
-    superset: pruned reads open more files (never fewer). (None, None)
-    — zero rows across all footers — proves an empty batch; a
-    non-empty footer with an empty post-filter batch just wastes one
-    no-op cycle."""
-    from urllib.parse import unquote, urlparse
-
-    try:
-        uris = batch.inputFiles()
-    except Exception:
-        return None
-    if not uris:
-        return None
-    paths = []
-    for uri in uris:
-        p = urlparse(uri)
-        if p.scheme not in ("", "file"):
-            return None  # remote FS: let Spark do it
-        paths.append(unquote(p.path or uri))
-    stats = footer_stats("", paths)
-    if len(stats) != len(paths):
-        return None  # a footer pyarrow could not read
-    lo = hi = None
-    for st in stats.values():
-        if not st["rows"]:
-            continue
-        z = st["cols"].get(id_col)
-        if z is None or z[0] is None:
-            return None  # rows without usable stats: can't bound
-        lo = z[0] if lo is None else min(lo, z[0])
-        hi = z[1] if hi is None else max(hi, z[1])
-    return lo, hi  # (None, None): every file is empty
-
-
 def _batch_id_range(batch: DataFrame, id_col: str) -> tuple[int, int]:
-    """(min, max) id of a non-empty batch — the probe range for the
-    seen-ids and landed-catalog pruned reads. Fast path: parquet
-    footer statistics, driver-side, zero Spark jobs (`_footer_id_range`
-    — superset-sound for every consumer); falls back to one tiny agg
-    job when footers can't prove a bound."""
-    fast = _footer_id_range(batch, id_col)
-    if fast is not None:
-        return fast
+    """(min, max) id of the batch — the probe range for the seen-ids
+    and landed-catalog pruned reads; (None, None) for an empty batch.
+    One small aggregation job per micro-batch: the frame Spark hands
+    ``foreachBatch`` has no file-scan leaves (``inputFiles()`` is
+    empty), so footer statistics cannot bound it."""
     r = batch.agg(
         F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
     ).first()
@@ -887,21 +838,14 @@ def _dedup_ingest(
         # the landing write AND the ids delta — one scan+dedup
         # materialization shared by all three instead of re-running
         # per action (the ids append was re-paying the batch shuffle)
-        # footer-stats probe BEFORE the checkpoint: a lazy
-        # localCheckpoint replaces the plan with a LogicalRDD, hiding
-        # the file-scan leaves from inputFiles() — probed here the
-        # range costs zero Spark jobs on the common file-source batch
-        fast = _footer_id_range(batch_df, id_col)
-        if fast == (None, None):
-            return  # footers prove an all-empty-files batch
         batch = (
             batch_df.select(id_col, *payload_cols)
             .dropDuplicates([id_col])
             .localCheckpoint(eager=False)
         )
-        # emptiness check + id-range probe: footer stats when they
-        # bound the batch (superset-sound), else one tiny agg
-        lo, hi = fast if fast is not None else _batch_id_range(batch, id_col)
+        # emptiness check + id-range probe in one agg job (it also
+        # materializes the lazy checkpoint the later steps reuse)
+        lo, hi = _batch_id_range(batch, id_col)
         if lo is None:
             return
         seen = _load_index(
@@ -1138,6 +1082,11 @@ def run_ingest_available_now(
     )
 
 
+# Landing schemas: exactly what each ingest's landed frame writes, so a
+# reader of a landing declares its schema instead of inferring it.
+DECONTAMINATE_LANDED_SCHEMA = "doc_id bigint, n_ngrams int"
+
+
 def decontaminate_ingest(
     doc_stream: DataFrame,
     eval_df: DataFrame,
@@ -1203,6 +1152,10 @@ def decontaminate_ingest(
         update_zones(out_path, ["doc_id"])
 
     return doc_stream.writeStream.foreachBatch(process_batch)
+
+
+QUALITY_KEPT_SCHEMA = "doc_id bigint, n_chars int"
+QUALITY_REJECTS_SCHEMA = f"{QUALITY_KEPT_SCHEMA}, reason string"
 
 
 def quality_route_ingest(
@@ -1341,6 +1294,9 @@ def cc_label_ingest(
             )
 
     return pair_stream.writeStream.foreachBatch(process_batch)
+
+
+SUBSTRING_LANDED_SCHEMA = "doc_id bigint, n_chars int, dup_chars bigint"
 
 
 def substring_dedup_ingest(

@@ -19,48 +19,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# (path, mtime)-keyed cache of the one-off schema probe below: the
-# probe is a driver-side file listing + parquet footer read (~0.1 s),
-# and every streaming query pays it on EVERY construction — 26 times
-# per bench run over the same immutable file. The mtime key invalidates
-# on testdata regeneration; the cache holds schemas only (no DataFrames,
-# nothing session-pinned).
-_EVENTS_SCHEMA_CACHE: dict[tuple[str, float], object] = {}
+from ..schemas import STAR_SCHEMAS
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet.
 
-    A file stream needs an explicit schema, but the testdata's physical
-    ts type has shipped both as TIMESTAMP(NANOS) (readable only as
-    nanos-as-long) and TIMESTAMP(MICROS) without timezone (reads as
-    TIMESTAMP_NTZ) — so probe the file with a one-off batch read and
-    mirror whatever it reports, then normalize ts to session-zone
-    TIMESTAMP exactly like readers.load_table does for the batch path.
+    A file stream needs an explicit schema: it takes the declared
+    events schema (`schemas.STAR_SCHEMAS`, the same one
+    `readers.load_table` reads with — no probe of the file), and ts is
+    cast from its stored TIMESTAMP_NTZ to session-zone TIMESTAMP exactly
+    like the batch path does.
     """
-    import os
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    key = (path, os.path.getmtime(path))
-    probe = _EVENTS_SCHEMA_CACHE.get(key)
-    if probe is None:
-        _EVENTS_SCHEMA_CACHE.clear()
-        probe = spark.read.parquet(path).schema
-        _EVENTS_SCHEMA_CACHE[key] = probe
     raw = (
-        spark.readStream.schema(probe)
+        spark.readStream.schema(STAR_SCHEMAS["events"])
         .format("parquet")
         .option("path", f"{sf_dir}")
         .option("pathGlobFilter", "events.parquet")
         .load()
     )
-    ts_type = {f.name: f.dataType.simpleString() for f in probe.fields}.get("ts")
-    if ts_type == "bigint":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if ts_type == "timestamp_ntz":
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def tumbling_counts(
