@@ -52,7 +52,6 @@ from kommunedata_data_pipeline_spark.functions.text import (
     bpe_token_count,
     rolling_fingerprint,
     rolling_hashes,
-    BPE_TOKEN_RE,
     ROLL_B,
     ROLL_P,
     ROLL_TOK_MOD,
@@ -1398,8 +1397,9 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """32-bit bit-majority SimHash per document (near-dup fingerprint;
-    Hamming-banded pair generation lives in operators.dedup)."""
+    """32-bit bit-majority SimHash per document (near-dup fingerprint).
+    Only the fingerprint table is computed; no query generates
+    Hamming-distance pairs from it."""
     d = _t(spark, sf_dir, "documents")
     return simhash_docs(d, 32)
 

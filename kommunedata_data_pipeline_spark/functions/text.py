@@ -34,10 +34,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def punct_ratio(text: Column) -> Column:
     """punctuation chars / total chars (quality-scoring feature)."""
     n_punct = F.length(text) - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
@@ -115,12 +111,6 @@ def word_shingles(text: Column, k: int = 3) -> Column:
         ).otherwise(F.array(F.concat_ws(" ", toks)))
 
     return let(F.split(normalized_text(text), " "), _shingles)
-
-
-def minhash_value(shingle: Column, seed: int) -> Column:
-    """One MinHash hash-function evaluation: stable md5-derived BIGINT of
-    (seed || shingle); min() over shingles per doc = the signature slot."""
-    return md5_bigint(F.concat(F.lit(f"s{seed}:"), shingle))
 
 
 # BPE-ish pre-tokenizer pattern (GPT-2-style, simplified to the ASCII

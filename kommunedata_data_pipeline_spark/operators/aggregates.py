@@ -1,4 +1,5 @@
-"""Aggregation operators (SURVEY §2.4 A1-A5).
+"""Aggregation operators beyond SURVEY §2.4 A1-A5 (the queries do those
+inline with groupBy, conditional sums, collect_list and distinct).
 
 All hash-aggregates with map-side partial aggregation (Spark default) —
 the reference's counter variables and set-accumulators become one
@@ -9,48 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def run_metrics(df: DataFrame, script_col: str = "script") -> DataFrame:
-    """A1 — success/fail counts + duration per script (run_scrapers.py:59-97)."""
-    return (
-        df.groupBy(script_col)
-        .agg(
-            F.count(F.when(F.col("ok"), 1)).alias("n_success"),
-            F.count(F.when(~F.col("ok"), 1)).alias("n_fail"),
-            F.round(F.sum("duration"), 2).alias("total_duration"),
-        )
-        .orderBy(script_col)
-    )
-
-
-def counts_per_group(df: DataFrame, *group_cols: str) -> DataFrame:
-    """A2 — found-count per page/source (scraper.py:139 counters)."""
-    return df.groupBy(*group_cols).agg(F.count("*").alias("n")).orderBy(*group_cols)
-
-
-def count_if(df: DataFrame, pred, alias: str = "n_valid") -> DataFrame:
-    """A3 — count rows passing a predicate (limit checks,
-    scraper_svendborg.py:180-189)."""
-    return df.agg(F.sum(F.when(pred, 1).otherwise(0)).alias(alias))
-
-
-def collect_ordered(df: DataFrame, key: str, order_col: str, value_col: str) -> DataFrame:
-    """A4 — per-key ordered accumulation (participants/agenda items,
-    scraper_ringkoebing_skjern.py:146-156) with order reified via
-    sort_array(collect_list(struct(...)))."""
-    return df.groupBy(key).agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct(order_col, value_col))),
-            lambda s: s[value_col],
-        ).alias("values")
-    )
-
-
-def distinct_set(df: DataFrame, col: str) -> DataFrame:
-    """A5 — set-accumulate distinct values (unique_final_portals,
-    get_base_url.py:84-110)."""
-    return df.select(col).distinct().orderBy(col)
 
 
 def distinct_count_two_phase(

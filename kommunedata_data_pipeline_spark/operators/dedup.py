@@ -11,8 +11,8 @@ Four families over a `documents(doc_id, text, ...)` table:
 - MinHash-LSH: per-doc signature computed as ONE expression (no explode ×
               num_hashes), banded; candidate pairs only within a band
               bucket — the standard sub-quadratic near-dup path.
-- SimHash:    32-bit token-set simhash per doc (bit-majority), bucketed by
-              band for candidate generation.
+- SimHash:    32-bit token-set simhash per doc (bit-majority); the
+              (doc_id, simhash) table is the oracle-checked output.
 
 Every hash is md5-derived (functions.strings.md5_bigint) so the DuckDB
 oracle computes bit-identical values — Spark's murmur `hash()` would not
@@ -30,21 +30,6 @@ from pyspark.sql import functions as F
 from ..functions.expr import let
 from ..functions.strings import md5_bigint
 from ..functions.text import fingerprint, normalized_text, word_shingles
-
-
-def exact_duplicates(documents: DataFrame) -> DataFrame:
-    """Groups of byte-identical (after normalization) docs: one row per
-    duplicated fingerprint with the member doc_ids and the kept (min) id."""
-    return (
-        documents.select(F.col("doc_id"), fingerprint(F.col("text")).alias("fp"))
-        .groupBy("fp")
-        .agg(
-            F.count("*").alias("n_dups"),
-            F.min("doc_id").alias("keep_doc_id"),
-        )
-        .where(F.col("n_dups") > 1)
-        .orderBy("fp")
-    )
 
 
 def dedup_exact(documents: DataFrame) -> DataFrame:
@@ -736,57 +721,6 @@ def simhash_docs(documents: DataFrame, nbits: int = 32) -> DataFrame:
     toks = F.array_distinct(F.split(normalized_text(F.col("text")), " "))
     return documents.select(
         "doc_id", _simhash_expr(toks, nbits).alias("simhash")
-    )
-
-
-def simhash_near_pairs(documents: DataFrame, nbits: int = 32, max_hamming: int = 6) -> DataFrame:
-    """Near-dup pairs by simhash Hamming distance ≤ max_hamming.
-
-    Candidate generation: band the nbits into 4 chunks — any two docs with
-    Hamming distance ≤ 3 share at least one exact chunk (pigeonhole), and
-    in practice chunk-sharing recalls most pairs up to max_hamming; join
-    per chunk then verify true Hamming. Scale: groupBy chunk value is the
-    only corpus-wide shuffle."""
-    chunks = 4
-    w = nbits // chunks
-    sims = simhash_docs(documents, nbits)
-    # chunk c key = floor(simhash / 2^(c*w)) % 2^w — contiguous w-bit slice
-    banded = sims.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(chunks - 1)),
-                lambda c: F.struct(
-                    c.alias("chunk"),
-                    (
-                        F.floor(
-                            F.col("simhash")
-                            / F.pow(F.lit(2.0), (c * w).cast("double"))
-                        ).cast("bigint")
-                        % F.lit(1 << w).cast("bigint")
-                    ).alias("ckey"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", F.col("bk.chunk").alias("chunk"), F.col("bk.ckey").alias("ckey"))
-    a, b = banded.alias("a"), banded.alias("b")
-    hamming = F.aggregate(
-        F.sequence(F.lit(0), F.lit(nbits - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, i: acc
-        + _nth_bit(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")), i),
-    ).cast("int")
-    return (
-        a.join(b, ["chunk", "ckey"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        .where(F.col("hamming") <= max_hamming)
     )
 
 

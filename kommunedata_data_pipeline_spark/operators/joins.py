@@ -1,8 +1,11 @@
-"""Join operators (SURVEY §2.3 J1-J4).
+"""Join operators (SURVEY §2.3 J2, plus as-of, range, salted, skew-split
+and spatial joins).
 
-The reference has no explicit joins — these are the four join *semantics*
-embedded in its loops, expressed as real Spark joins so Catalyst can pick
-broadcast-hash vs sort-merge and AQE can fix skew at runtime.
+The reference has no explicit joins — its loops embed four join
+*semantics* (J1-J4), which the queries express as real Spark joins so
+Catalyst can pick broadcast-hash vs sort-merge and AQE can fix skew at
+runtime. J2, the anti-join on the landed-keys catalog, is the one the
+ingests share, so it lives here.
 
 Scale notes (100 TB): config dims are small and bounded → always
 broadcast (no shuffle of the fact side). The anti-join right side
@@ -18,13 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def fanout_config(facts: DataFrame, config: DataFrame, on: list[str]) -> DataFrame:
-    """J1 — config × listings enrichment (1:N): every meeting row carries its
-    municipality/committee config columns (the loop at scraper.py:338-388).
-    Broadcast: config is ~hundreds of rows."""
-    return facts.join(F.broadcast(config), on=on, how="inner")
 
 
 def anti_join_catalog(new_rows: DataFrame, catalog: DataFrame, on: list[str]) -> DataFrame:
@@ -43,33 +39,6 @@ def anti_join_catalog(new_rows: DataFrame, catalog: DataFrame, on: list[str]) ->
     `F.broadcast` themselves (see `sinks._maybe_broadcast` for the
     size-gated variant the transactional sink uses)."""
     return new_rows.join(catalog, on=on, how="left_anti")
-
-
-def semi_join_filter(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
-    """J3 — inclusion filter (run script iff any config row matches,
-    run_scrapers.py:29-51) as left_semi."""
-    return left.join(F.broadcast(right), on=on, how="left_semi")
-
-
-def assemble_parent_child(
-    parents: DataFrame,
-    children: DataFrame,
-    key: str,
-    order_col: str,
-    payload_cols: list[str],
-) -> DataFrame:
-    """J4/A4 — parent-child recombination: meeting × ordered agenda items
-    into one nested row (scraper_copenhagen.py:219-230,
-    scraper_ringkoebing_skjern.py:196-213).
-
-    sort_array(collect_list(struct(order, payload...))) reifies child order
-    as data (O3) — Spark gives no incidental-order guarantee."""
-    items = children.groupBy(key).agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col(order_col), *[F.col(c) for c in payload_cols]))
-        ).alias("items")
-    )
-    return parents.join(items, on=key, how="left")
 
 
 def asof_join(

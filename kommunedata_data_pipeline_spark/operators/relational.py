@@ -4,7 +4,8 @@
 Each operator is a named, tested function over DataFrames, expressed with
 built-ins so Catalyst can push filters into scans and fuse projections
 into whole-stage codegen. At 100 TB the only shuffles here are the
-explicit ones: dropDuplicates, the window partitionBy, and exceptAll.
+explicit ones: the window partitionBy, the groupBy/join of the skyline
+and the full outer join of the snapshot diff.
 """
 
 from __future__ import annotations
@@ -25,26 +26,6 @@ def filter_municipality(df: DataFrame, needle: str | None, col: str = "municipal
     if not needle:
         return df
     return df.where(F.upper(F.col(col)).contains(needle.upper()))
-
-
-def drop_null_required(df: DataFrame, *cols: str) -> DataFrame:
-    """P6 — row-shape guards: post-extraction not-null requirements
-    (scraper_glostrup.py:177-194)."""
-    out = df
-    for c in cols:
-        out = out.where(F.col(c).isNotNull())
-    return out
-
-
-def dedup_by(df: DataFrame, *keys: str) -> DataFrame:
-    """D1/D2 — distinct-by-URL; the reference's seen-sets
-    (scraper.py:116-132) and O(n²) linear scans
-    (scraper_svendborg.py:155) become one hash dedup.
-
-    Scale note: dropDuplicates shuffles on the key — at 100 TB prefer
-    `dedup_by_keep_first` when an ordering matters, else this map-side
-    combinable form."""
-    return df.dropDuplicates(list(keys))
 
 
 def dedup_keep_first(df: DataFrame, keys: list[str], order: list[Column]) -> DataFrame:
@@ -74,35 +55,6 @@ def per_group_limit(
         .where(F.col("__rn") <= n)
         .drop("__rn")
     )
-
-
-def global_limit(df: DataFrame, n: int | None) -> DataFrame:
-    """O4 — DOWNLOAD_LIMIT global cap (scraper_utils.py:89-97)."""
-    return df if n is None else df.limit(n)
-
-
-def union_pages(*dfs: DataFrame) -> DataFrame:
-    """D3 — union of per-page frames (pagination append loops,
-    scraper.py:120-145). unionByName so column order never bites."""
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
-
-
-def new_files(after: DataFrame, before: DataFrame) -> DataFrame:
-    """D4 — set difference `files_now - files_before`
-    (scraper.py:241-243) as exceptAll."""
-    return after.exceptAll(before)
-
-
-def with_fallback_sequence(
-    df: DataFrame, partition_cols: list[str], order: list[Column], out_col: str = "seq"
-) -> DataFrame:
-    """W3 — fallback sequence numbering for date-less rows
-    (`svendborg_referat_{offset}` scraper_svendborg.py:150-152)."""
-    w = Window.partitionBy(*partition_cols).orderBy(*order)
-    return df.withColumn(out_col, F.row_number().over(w))
 
 
 def skyline_2d(

@@ -90,39 +90,6 @@ def sign_bucket(embedding: Column, nbits: int = 8) -> Column:
     )
 
 
-def lsh_bucketed_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nbits: int = 8,
-    query_id: str = "query_id",
-) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's sign-bucket.
-
-    Same scoring/ranking as brute force but the join is an equi-join on
-    bucket — at corpus scale this is a standard shuffle-partitioned probe
-    instead of a full scan per query (recall < 1 by design)."""
-    cand = embeddings.withColumn("bucket", sign_bucket(F.col("embedding"), nbits))
-    q = queries.withColumn("bucket", sign_bucket(F.col("q_embedding"), nbits))
-    joined = cand.join(
-        F.broadcast(q.select(query_id, "q_embedding", "bucket")), "bucket"
-    ).where(F.col("vec_id") != F.col(query_id))
-    scored = joined.select(
-        F.col(query_id),
-        F.col("vec_id"),
-        F.round(cosine(F.col("embedding"), F.col("q_embedding")), 5).alias("cosine_sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, "vec_id", "cosine_sim", "rank")
-        .orderBy(query_id, "rank")
-    )
-
-
 def banded_sign_keys(
     embedding: Column, n_bands: int = 4, band_bits: int = 8
 ) -> Column:

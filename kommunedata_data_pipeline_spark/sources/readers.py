@@ -1,9 +1,10 @@
-"""Batch sources (SURVEY §2.1 S1/S2/S14-S17).
+"""Batch sources: the declared star-table reads, JSONL/ORC connectors
+and binary blobs.
 
-The reference reads its config CSV with pandas + a stdlib-csv fallback
-(scraper.py:278-298) and URL lists with open()+strip (get_start_url.py:24-34).
-Here every source is a declarative `spark.read` so Catalyst gets pushdown,
-pruning, and partition discovery for free.
+Every source is a declarative `spark.read` so Catalyst gets pushdown,
+pruning, and partition discovery for free. The reference's config CSV
+(scraper.py:278-298) and URL-list file (get_start_url.py:24-34),
+SURVEY §2.1 S1/S2, have no reader here: no query or test reads them.
 """
 
 from __future__ import annotations
@@ -126,26 +127,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register each star table as a temp view for the SQL surface."""
     for name in STAR_TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def read_config_csv(spark: SparkSession, path: str) -> DataFrame:
-    """S1 — config scan, reference scraper.py:278-298 (`Base URL,Start URL`).
-
-    One parser (Spark's CSV source); the reference's pandas→csv fallback
-    chain (C4) is unnecessary.
-    """
-    df = spark.read.option("header", True).csv(path)
-    return df.toDF(*[c.strip().lower().replace(" ", "_") for c in df.columns])
-
-
-def read_url_list(spark: SparkSession, path: str) -> DataFrame:
-    """S2 — text-lines scan, reference get_start_url.py:24-34: strip blanks,
-    keep http(s) lines only."""
-    return (
-        spark.read.text(path)
-        .select(F.trim("value").alias("url"))
-        .where(F.col("url").startswith("http"))
-    )
 
 
 def read_jsonl(

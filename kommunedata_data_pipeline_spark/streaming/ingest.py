@@ -500,25 +500,29 @@ def store_bytes(index_path: str) -> tuple[int, int]:
     return base, delta
 
 
+# The doubling rule's trigger: deltas fold once their bytes reach this
+# multiple of the base's (see `maybe_compact`).
+COMPACT_RATIO = 1.0
+
+
 def maybe_compact(
     spark: SparkSession,
     index_path: str,
     schema: str,
     resolve,
-    ratio: float = 1.0,
     range_col: str | None = None,
     zone_cols: list[str] | None = None,
 ) -> bool:
     """Size-tiered compaction trigger (the LSM doubling rule): fold the
-    deltas iff their bytes reach ``ratio`` × the base's. With ratio=1
-    the base at least doubles per compaction, so there are at most
-    log2(store) compactions over a table's life and TOTAL compaction
+    deltas iff their bytes reach ``COMPACT_RATIO`` × the base's. With a
+    ratio of 1 the base at least doubles per compaction, so there are at
+    most log2(store) compactions over a table's life and TOTAL compaction
     write volume is bounded by ~2× the final store — amortized O(1)
     extra bytes per byte ingested, i.e. cumulative ingest I/O stays
     linear even WITH the periodic folds. Returns True if it
     compacted."""
     base, delta = store_bytes(index_path)
-    if delta and delta >= ratio * max(base, 1):
+    if delta and delta >= COMPACT_RATIO * max(base, 1):
         compact_index(
             spark,
             index_path,
@@ -734,7 +738,8 @@ def _key_set_probe(
 def _batch_id_range(batch: DataFrame, id_col: str) -> tuple[int, int]:
     """(min, max) id of the batch — the probe range for the seen-ids
     and landed-catalog pruned reads; (None, None) for an empty batch.
-    One small aggregation job per micro-batch: the frame Spark hands
+    One small aggregation per micro-batch (1 job with AQE off; 2 with
+    AQE on, see `_dedup_ingest`): the frame Spark hands
     ``foreachBatch`` has no file-scan leaves (``inputFiles()`` is
     empty), so footer statistics cannot bound it."""
     r = batch.agg(
@@ -834,17 +839,24 @@ def _dedup_ingest(
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # lazy-checkpoint the deduped batch: it feeds the band table,
-        # the landing write AND the ids delta — one scan+dedup
+        # checkpoint the deduped batch: it feeds the band table, the
+        # landing write AND the ids delta — one scan+dedup
         # materialization shared by all three instead of re-running
-        # per action (the ids append was re-paying the batch shuffle)
+        # per action (the ids append was re-paying the batch shuffle).
+        # The checkpoint is not lazy under AQE (foreachBatch frames keep
+        # the session's AQE): building it runs the dropDuplicates
+        # shuffle-map stage as 1 job, and the id-range agg below then
+        # runs 2 (the dedup reduce, then the agg). With AQE off the
+        # build runs nothing and the agg is 1 job. Measured per
+        # micro-batch at sf0.01 in a get_spark session; the batch is
+        # scanned and deduplicated once either way.
         batch = (
             batch_df.select(id_col, *payload_cols)
             .dropDuplicates([id_col])
             .localCheckpoint(eager=False)
         )
-        # emptiness check + id-range probe in one agg job (it also
-        # materializes the lazy checkpoint the later steps reuse)
+        # emptiness check + id-range probe in one aggregation (it also
+        # finishes materializing the checkpoint the later steps reuse)
         lo, hi = _batch_id_range(batch, id_col)
         if lo is None:
             return
@@ -920,8 +932,8 @@ def minhash_dedup_ingest(
     the stored MinHash band index, land survivors exactly once, append
     the batch's band-row DELTA to the store (see `_dedup_ingest` for
     the replay contract). Signatures are computed ONCE per batch (the
-    band table is lazily checkpointed and shared by the pair join and
-    the delta)."""
+    band table is checkpointed and shared by the pair join and the
+    delta)."""
     from ..operators.dedup import minhash_band_table, minhash_index_update
 
     probe_state: dict = {}
@@ -1008,18 +1020,17 @@ def ann_dedup_ingest(
 def run_writer_available_now(
     writer,
     checkpoint: str,
-    shuffle_partitions: int | None = 8,
     durations_key: str | None = None,
 ) -> None:
     """Drive an un-started ingest writeStream over everything currently
     staged (the bounded ST4 full-scan shape): availableNow, synchronous.
 
-    ``shuffle_partitions`` is scoped to the run (same discipline as
+    The run uses 8 shuffle partitions, scoped to it (same discipline as
     `windows.run_to_memory`): the foreachBatch body joins batch-sized
     frames, and under the driver's 200-partition session every batch
     join would pay 200 near-empty tasks. foreachBatch holds no
     watermark state, so the no-data micro-batch is also disabled for
-    the run. None = inherit the session conf.
+    the run.
 
     ``durations_key``: stash the run's summed per-phase durationMs under
     this key in `windows.LAST_RUN_DURATIONS` (the bench reads
@@ -1034,9 +1045,8 @@ def run_writer_available_now(
     nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
     prev_parts = spark.conf.get(part_key) if spark else None
     prev_nodata = spark.conf.get(nodata_key, "true") if spark else "true"
-    if spark and shuffle_partitions is not None:
-        spark.conf.set(part_key, str(shuffle_partitions))
     if spark:
+        spark.conf.set(part_key, "8")
         spark.conf.set(nodata_key, "false")
     try:
         q = (
@@ -1060,9 +1070,8 @@ def run_writer_available_now(
             except Exception:
                 pass
     finally:
-        if spark and shuffle_partitions is not None:
-            spark.conf.set(part_key, prev_parts)
         if spark:
+            spark.conf.set(part_key, prev_parts)
             spark.conf.set(nodata_key, prev_nodata)
 
 
@@ -1119,9 +1128,10 @@ def decontaminate_ingest(
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # checkpoint the deduped batch: the id-range agg below is its
-        # materialization, shared by the gram explode and both text
-        # reads of the landing plan (same discipline as _dedup_ingest)
+        # checkpoint the deduped batch, shared by the gram explode and
+        # both text reads of the landing plan; the build (under AQE)
+        # and the id-range agg below materialize it (same discipline
+        # and job split as _dedup_ingest)
         batch = (
             batch_df.select("doc_id", "text")
             .dropDuplicates(["doc_id"])
@@ -1186,8 +1196,9 @@ def quality_route_ingest(
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # checkpoint + agg-materialize the deduped batch: both routed
-        # sides read it (same discipline as _dedup_ingest)
+        # checkpoint the deduped batch, which both routed sides read;
+        # the build (under AQE) and the id-range agg materialize it
+        # (same discipline and job split as _dedup_ingest)
         batch = (
             batch_df.select("doc_id", "text")
             .dropDuplicates(["doc_id"])
@@ -1256,8 +1267,11 @@ def cc_label_ingest(
         spark = batch_df.sparkSession
         # checkpoint the deduped batch (it feeds the contraction's
         # member/edge sides 3×) and COUNT it instead of isEmpty(): the
-        # count is the checkpoint's materialization, doubles as the
-        # emptiness gate, and its value bounds the contracted graph
+        # count finishes the checkpoint's materialization (under AQE
+        # the build already ran the dedup shuffle, as in
+        # _dedup_ingest: 1 job at build, 2 for the count; with AQE off
+        # 0 and 1), doubles as the emptiness gate, and its value
+        # bounds the contracted graph
         # (≤ batch pairs) — passed down so dup_clusters skips the
         # strategy count() that otherwise executed the whole
         # contraction pipeline once extra per batch.
@@ -1347,9 +1361,10 @@ def substring_dedup_ingest(
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # checkpoint + agg-materialize the deduped batch: the gram
-        # explode and the stats projection both read it (same
-        # discipline as _dedup_ingest)
+        # checkpoint the deduped batch, which the gram explode and the
+        # stats projection both read; the build (under AQE) and the
+        # id-range agg materialize it (same discipline and job split
+        # as _dedup_ingest)
         batch = (
             batch_df.select("doc_id", "text")
             .dropDuplicates(["doc_id"])
@@ -1424,7 +1439,10 @@ def substring_dedup_ingest(
         # gram-disjoint under the id-ordered contract, so this groupBy
         # is a pass-through), then annotate each BATCH gram with the
         # stored first-occurrence — the joined frame is batch-sized and
-        # shared (lazy checkpoint) by the coverage lookup AND the delta.
+        # shared (checkpointed) by the coverage lookup AND the delta.
+        # Building this checkpoint runs the stages below it: under AQE
+        # both groupBy shuffles (3 jobs per batch at sf0.01, measured),
+        # with AQE off only a broadcast side, if the planner picks one.
         # A provably-empty store (first batch / all files zone-skipped)
         # short-circuits to a null annotation — no groupBy, no join
         if getattr(store, "_kdp_provably_empty", False):

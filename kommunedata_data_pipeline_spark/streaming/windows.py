@@ -161,11 +161,6 @@ def _analyzed_plan(stream_df: DataFrame) -> str:
         return ""
 
 
-def _has_watermark(stream_df: DataFrame) -> bool:
-    """True if the streaming plan declares an event-time watermark."""
-    return "EventTimeWatermark" in _analyzed_plan(stream_df)
-
-
 def _needs_nodata_finalize(stream_df: DataFrame, output_mode: str) -> bool:
     """True only when the final no-data micro-batch changes WHAT the sink
     receives: an append-mode watermarked AGGREGATION emits a window only

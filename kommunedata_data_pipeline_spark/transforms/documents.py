@@ -310,18 +310,6 @@ def merge_pdf_parts(parts: DataFrame, key: str = "doc_key") -> DataFrame:
     )
 
 
-def with_try_struct(df: DataFrame, value_col: str, pred: Column) -> DataFrame:
-    """C5 — error containment as data: rows failing `pred` get ok=False +
-    error instead of failing the job; downstream filters route them to a
-    dead-letter sink (S18, scraper_ishoej.py:107-110)."""
-    return df.withColumn("ok", pred).withColumn(
-        "error",
-        F.when(pred, F.lit(None).cast("string")).otherwise(
-            F.concat(F.lit("invalid "), F.lit(value_col))
-        ),
-    )
-
-
 def dead_letter_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Route ok=False rows to the quarantine side (S18 debug sink)."""
     return df.where(F.col("ok")), df.where(~F.col("ok"))
