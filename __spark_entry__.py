@@ -1145,6 +1145,18 @@ def q_minhash_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.orderBy("doc_a", "doc_b")
 
 
+def _ram_tmp() -> str:
+    """Scratch root for the streaming-ingest and transactional-sink
+    queries — RAM-backed where available (the stores and sink files
+    are bookkeeping, not results: each query pins what it returns
+    before it removes the root)."""
+    import tempfile
+
+    return tempfile.mkdtemp(
+        prefix="kdp-", dir="/dev/shm" if os.path.isdir("/dev/shm") else None
+    )
+
+
 def _stage_id_batches(df: DataFrame, id_col: str, base: str, n: int = 3) -> str:
     """Stage ``df`` as ``n`` id-ordered parquet files with strictly
     increasing mtimes (the file source orders batches by modification
@@ -1171,6 +1183,49 @@ def _stage_id_batches(df: DataFrame, id_col: str, base: str, n: int = 3) -> str:
         _os.rename(src, dst)
         _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
     return stage
+
+
+def _drain_ingest(
+    spark: SparkSession, name: str, staged: DataFrame, writer, read_back
+) -> DataFrame:
+    """One stream-ingest query end to end: stage ``staged`` as three
+    id-ordered files (`_stage_id_batches`; the id is its first column)
+    under a `_ram_tmp` root, stream them one file per trigger through
+    ``writer(stream, base)`` — an un-started ingest writeStream over
+    stores under ``base`` — with `run_writer_available_now`, and pin
+    ``read_back(base)`` into executor storage before the root is
+    removed (the returned frame must not lazily re-read a deleted
+    path; localCheckpoint is cluster-side, no driver
+    materialization). The run's per-phase durations are stashed under
+    ``{name}_sink``, the key bench.py reads for its exec-vs-wall
+    split."""
+    import shutil
+
+    from kommunedata_data_pipeline_spark.streaming.ingest import (
+        run_writer_available_now,
+    )
+
+    base = _ram_tmp()
+    try:
+        stage = _stage_id_batches(staged, staged.columns[0], base)
+        stream = (
+            spark.readStream.schema(
+                ", ".join(
+                    f"{f.name} {f.dataType.simpleString()}"
+                    for f in staged.schema.fields
+                )
+            )
+            .option("maxFilesPerTrigger", "1")
+            .parquet(stage)
+        )
+        run_writer_available_now(
+            writer(stream, base),
+            f"{base}/ckpt",
+            durations_key=f"{name}_sink",
+        )
+        return read_back(base).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 @_q(
@@ -1200,47 +1255,27 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference shape this composes: per-run NEW filter + sink-state
     anti-join + idempotent landing (scraper.py:181-267) lifted from
     exact URLs to MinHash."""
-    import shutil
-    import tempfile
-
     from kommunedata_data_pipeline_spark.streaming.ingest import (
-        run_ingest_available_now,
+        minhash_dedup_ingest,
     )
 
-    base = tempfile.mkdtemp(
-        prefix="kdp-ingest-",
-        dir="/dev/shm" if __import__("os").path.isdir("/dev/shm") else None,
-    )
-    try:
-        d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        stage = _stage_id_batches(d, "doc_id", base)
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
-        )
-        run_ingest_available_now(
+    landed = _drain_ingest(
+        spark,
+        "q_stream_ingest_dedup",
+        _t(spark, sf_dir, "documents").select("doc_id", "text"),
+        lambda stream, base: minhash_dedup_ingest(
             stream,
             f"{base}/index",
             f"{base}/landed",
-            f"{base}/ckpt",
-            durations_key="q_stream_ingest_dedup_sink",
             k=3,
             num_hashes=16,
             bands=4,
             threshold=0.5,
-        )
-        # pin the landed rows into executor storage BEFORE the staging
-        # dirs are removed (the returned frame must not lazily re-read
-        # a deleted path); localCheckpoint is cluster-side, no driver
-        # materialization
-        landed = (
-            spark.read.schema("doc_id bigint")
-            .parquet(f"{base}/landed")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        ),
+        lambda base: spark.read.schema("doc_id bigint").parquet(
+            f"{base}/landed"
+        ),
+    )
     return landed.orderBy("doc_id")
 
 
@@ -1281,45 +1316,26 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract: id-ordered arrival makes the landed set a pure function of
     the vector set (drop iff near-dup of ANY smaller-id vector ever
     seen), so one batch or three equals the batch-mode full-rebuild SQL."""
-    import shutil
-    import tempfile
-
     from kommunedata_data_pipeline_spark.streaming.ingest import (
         ann_dedup_ingest,
-        run_writer_available_now,
     )
 
-    base = tempfile.mkdtemp(
-        prefix="kdp-anningest-",
-        dir="/dev/shm" if __import__("os").path.isdir("/dev/shm") else None,
+    landed = _drain_ingest(
+        spark,
+        "q_stream_ann_ingest",
+        _t(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
+        lambda stream, base: ann_dedup_ingest(
+            stream,
+            f"{base}/index",
+            f"{base}/landed",
+            n_bands=4,
+            band_bits=8,
+            threshold=0.3,
+        ),
+        lambda base: spark.read.schema("vec_id bigint").parquet(
+            f"{base}/landed"
+        ),
     )
-    try:
-        e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        stage = _stage_id_batches(e, "vec_id", base)
-        stream = (
-            spark.readStream.schema("vec_id bigint, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
-        )
-        run_writer_available_now(
-            ann_dedup_ingest(
-                stream,
-                f"{base}/index",
-                f"{base}/landed",
-                n_bands=4,
-                band_bits=8,
-                threshold=0.3,
-            ),
-            f"{base}/ckpt",
-            durations_key="q_stream_ann_ingest_sink",
-        )
-        landed = (
-            spark.read.schema("vec_id bigint")
-            .parquet(f"{base}/landed")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return landed.orderBy("vec_id")
 
 
@@ -9717,41 +9733,23 @@ def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index-carrying MinHash/ANN ingests, no arrival-order contract
     is even needed); landed ≡ q_decontaminate's batch answer
     (streaming/ingest.py:decontaminate_ingest)."""
-    import shutil
-    import tempfile
-
     from kommunedata_data_pipeline_spark.streaming.ingest import (
         DECONTAMINATE_LANDED_SCHEMA,
         decontaminate_ingest,
-        run_writer_available_now,
     )
 
-    base = tempfile.mkdtemp(
-        prefix="kdp-decon-",
-        dir="/dev/shm" if __import__("os").path.isdir("/dev/shm") else None,
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    landed = _drain_ingest(
+        spark,
+        "q_stream_decontaminate",
+        d.where(F.col("doc_id") % 2 == 0),
+        lambda stream, base: decontaminate_ingest(
+            stream, d.where(F.col("doc_id") % 2 == 1), f"{base}/landed", n=8
+        ),
+        lambda base: spark.read.schema(DECONTAMINATE_LANDED_SCHEMA).parquet(
+            f"{base}/landed"
+        ),
     )
-    try:
-        d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        train = d.where(F.col("doc_id") % 2 == 0)
-        eval_df = d.where(F.col("doc_id") % 2 == 1)
-        stage = _stage_id_batches(train, "doc_id", base)
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
-        )
-        run_writer_available_now(
-            decontaminate_ingest(stream, eval_df, f"{base}/landed", n=8),
-            f"{base}/ckpt",
-            durations_key="q_stream_decontaminate_sink",
-        )
-        landed = (
-            spark.read.schema(DECONTAMINATE_LANDED_SCHEMA)
-            .parquet(f"{base}/landed")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return landed.orderBy("doc_id")
 
 
@@ -10403,45 +10401,26 @@ def q_stream_substring_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop rule is a pure function of the document set under id-ordered
     arrival, so the landed set equals this one-batch SQL
     (streaming/ingest.py:substring_dedup_ingest)."""
-    import shutil
-    import tempfile
-
     from kommunedata_data_pipeline_spark.streaming.ingest import (
         SUBSTRING_LANDED_SCHEMA,
-        run_writer_available_now,
         substring_dedup_ingest,
     )
 
-    base = tempfile.mkdtemp(
-        prefix="kdp-subingest-",
-        dir="/dev/shm" if __import__("os").path.isdir("/dev/shm") else None,
+    landed = _drain_ingest(
+        spark,
+        "q_stream_substring_ingest",
+        _t(spark, sf_dir, "documents").select("doc_id", "text"),
+        lambda stream, base: substring_dedup_ingest(
+            stream,
+            f"{base}/index",
+            f"{base}/landed",
+            min_len=25,
+            max_dup_ratio=0.5,
+        ),
+        lambda base: spark.read.schema(SUBSTRING_LANDED_SCHEMA).parquet(
+            f"{base}/landed"
+        ),
     )
-    try:
-        d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        stage = _stage_id_batches(d, "doc_id", base)
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
-        )
-        run_writer_available_now(
-            substring_dedup_ingest(
-                stream,
-                f"{base}/index",
-                f"{base}/landed",
-                min_len=25,
-                max_dup_ratio=0.5,
-            ),
-            f"{base}/ckpt",
-            durations_key="q_stream_substring_ingest_sink",
-        )
-        landed = (
-            spark.read.schema(SUBSTRING_LANDED_SCHEMA)
-            .parquet(f"{base}/landed")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return landed.orderBy("doc_id")
 
 
@@ -12436,59 +12415,40 @@ def q_stream_quality_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     dead-letter discipline, C5/S18, made streaming). Stateless, so
     batching provably cannot change either landed set; both sinks are
     exactly-once (streaming/ingest.py:quality_route_ingest)."""
-    import shutil
-    import tempfile
-
     from kommunedata_data_pipeline_spark.streaming.ingest import (
         QUALITY_KEPT_SCHEMA,
         QUALITY_REJECTS_SCHEMA,
         quality_route_ingest,
-        run_writer_available_now,
     )
 
-    base = tempfile.mkdtemp(
-        prefix="kdp-qroute-",
-        dir="/dev/shm" if __import__("os").path.isdir("/dev/shm") else None,
-    )
-    try:
-        d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        stage = _stage_id_batches(d, "doc_id", base)
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
+    def routed(base: str) -> DataFrame:
+        kept = spark.read.schema(QUALITY_KEPT_SCHEMA).parquet(f"{base}/kept")
+        rejects = spark.read.schema(QUALITY_REJECTS_SCHEMA).parquet(
+            f"{base}/rejects"
         )
-        run_writer_available_now(
-            quality_route_ingest(
-                stream, f"{base}/kept", f"{base}/rejects"
-            ),
-            f"{base}/ckpt",
-            durations_key="q_stream_quality_route_sink",
-        )
-        kept = (
-            spark.read.schema(QUALITY_KEPT_SCHEMA)
-            .parquet(f"{base}/kept")
-            .select(
-                "doc_id",
-                "n_chars",
-                F.lit("kept").alias("route"),
-                F.lit(None).cast("string").alias("reason"),
-            )
-        )
-        rejects = (
-            spark.read.schema(QUALITY_REJECTS_SCHEMA)
-            .parquet(f"{base}/rejects")
-            .select(
+        return kept.select(
+            "doc_id",
+            "n_chars",
+            F.lit("kept").alias("route"),
+            F.lit(None).cast("string").alias("reason"),
+        ).unionAll(
+            rejects.select(
                 "doc_id",
                 "n_chars",
                 F.lit("dead_letter").alias("route"),
                 "reason",
             )
         )
-        routed = kept.unionAll(rejects).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return routed.orderBy("doc_id")
+
+    return _drain_ingest(
+        spark,
+        "q_stream_quality_route",
+        _t(spark, sf_dir, "documents").select("doc_id", "text"),
+        lambda stream, base: quality_route_ingest(
+            stream, f"{base}/kept", f"{base}/rejects"
+        ),
+        routed,
+    ).orderBy("doc_id")
 
 
 @_q(
@@ -13370,42 +13330,21 @@ def q_stream_cc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival-order contract at all (edge unions are commutative); the
     landed store ≡ the full-rebuild CC oracle
     (streaming/ingest.py:cc_label_ingest)."""
-    import shutil
-    import tempfile
-
     from kommunedata_data_pipeline_spark.streaming.ingest import (
         cc_label_ingest,
         read_cc_labels,
-        run_writer_available_now,
     )
 
-    base = tempfile.mkdtemp(
-        prefix="kdp-ccing-",
-        dir="/dev/shm" if __import__("os").path.isdir("/dev/shm") else None,
+    d = _t(spark, sf_dir, "documents")
+    # the resolved view of the delta-append store (min-per-doc = the
+    # latest label; labels only decrease under min-label merges)
+    labels = _drain_ingest(
+        spark,
+        "q_stream_cc_ingest",
+        minhash_lsh_pairs(d, 3, 16, 4, 0.5).select("doc_a", "doc_b"),
+        lambda stream, base: cc_label_ingest(stream, f"{base}/labels"),
+        lambda base: read_cc_labels(spark, f"{base}/labels"),
     )
-    try:
-        d = _t(spark, sf_dir, "documents")
-        pairs = minhash_lsh_pairs(d, 3, 16, 4, 0.5).select(
-            "doc_a", "doc_b"
-        )
-        stage = _stage_id_batches(pairs, "doc_a", base)
-        stream = (
-            spark.readStream.schema("doc_a bigint, doc_b bigint")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
-        )
-        run_writer_available_now(
-            cc_label_ingest(stream, f"{base}/labels"),
-            f"{base}/ckpt",
-            durations_key="q_stream_cc_ingest_sink",
-        )
-        # resolved view of the delta-append store (min-per-doc = the
-        # latest label; labels only decrease under min-label merges)
-        labels = read_cc_labels(spark, f"{base}/labels").localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return labels.orderBy("doc_id")
 
 
@@ -13457,18 +13396,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rfm_segments(_t(spark, sf_dir, "orders"), n_tiles=5)
 
 
-def _lakehouse_tmp() -> str:
-    """Scratch root for the transactional-sink queries — RAM-backed
-    where available (the sink's files are commit-log bookkeeping, not
-    results; same placement as the ingest-family queries)."""
-    import tempfile
-
-    return tempfile.mkdtemp(
-        prefix="kdp-lakehouse-",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-
-
 @_q(
     "q_lakehouse_merge_roundtrip",
     """
@@ -13514,7 +13441,7 @@ def q_lakehouse_merge_roundtrip(
 
     from kommunedata_data_pipeline_spark.sources import sinks
 
-    base = _lakehouse_tmp()
+    base = _ram_tmp()
     try:
         path = os.path.join(base, "tbl")
         d = _t(spark, sf_dir, "documents").select(
@@ -13608,7 +13535,7 @@ def q_lakehouse_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kommunedata_data_pipeline_spark.sources import sinks
     from kommunedata_data_pipeline_spark.streaming import consume_changes
 
-    base = _lakehouse_tmp()
+    base = _ram_tmp()
     try:
         path = os.path.join(base, "tbl")
         d = _t(spark, sf_dir, "documents").select(
@@ -13730,7 +13657,7 @@ def q_stream_table_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from kommunedata_data_pipeline_spark.sources import sinks
 
-    base = _lakehouse_tmp()
+    base = _ram_tmp()
     try:
         path = os.path.join(base, "tbl")
         d = _t(spark, sf_dir, "documents").select(
@@ -13861,7 +13788,7 @@ def q_lakehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kommunedata_data_pipeline_spark.sources import sinks
 
-    base = _lakehouse_tmp()
+    base = _ram_tmp()
     try:
         path = os.path.join(base, "tbl")
         d = _t(spark, sf_dir, "documents").select(

@@ -67,6 +67,16 @@ contraction is a GLOBAL fixpoint (a batch edge may relabel every
 member of any cluster it touches), so the resolved label view is the
 working set by semantics, not by implementation — documented contract,
 not a scan defect.
+
+One path serves all six ingests. Each persisted store's layout — its
+schema, monoid, range key and zone columns — is declared once as a
+`Store` (`BAND_STORES`, `id_store`, `GRAM_STORE`, `CC_LABEL_STORE`);
+its delta appends, reads and both compaction paths (`compact_*` and
+``auto_compact``, through `Store.compact`) read that declaration. The
+id-keyed ingests share one batch prologue (`_fresh_batches`: project,
+dedup, checkpoint, id range, empty-batch return), one exactly-once
+landing (`_unlanded`, `_land`) and one publish step for a staged delta
+(`_publish`: fold, next `ver=N`, rename, `WRITE_LOG`, zones).
 """
 
 from __future__ import annotations
@@ -74,6 +84,8 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from collections.abc import Sequence
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -84,8 +96,85 @@ from ..sources.zones import (
     update_zones,
 )
 
+
+@dataclass(frozen=True)
+class Store:
+    """One persisted ingest store's layout, stated once: its delta
+    appends, its per-batch reads and both compaction paths (explicit
+    `compact_*` and ``auto_compact``) all read it.
+
+    - ``schema``: the stored columns, declared on every read;
+    - ``key``: the natural key; ``key[0]`` is the id that the store's
+      tombstone sidecar (`tombstone_index_ids`) names;
+    - ``merge``: the column min-merged per key (gram first occurrence,
+      CC label); None keeps one whole row per key;
+    - ``range_col``: compaction range-partitions and sorts the base by
+      it — the per-batch probe key;
+    - ``zone_cols``: the columns whose per-file [min, max] the zone
+      manifest records, on every append and compaction."""
+
+    schema: str
+    key: tuple[str, ...]
+    merge: str | None
+    range_col: str
+    zone_cols: tuple[str, ...]
+
+    def resolve(self, raw: DataFrame) -> DataFrame:
+        """The store's monoid over its raw rows: min-merge ``merge``
+        per key, or one row per key."""
+        if self.merge is None:
+            return raw.dropDuplicates(list(self.key))
+        return raw.groupBy(*self.key).agg(F.min(self.merge).alias(self.merge))
+
+    def compact(
+        self,
+        spark: SparkSession,
+        path: str,
+        target_file_bytes: int | None = None,
+    ) -> None:
+        """Fold the store at ``path`` into one resolved base laid out as
+        declared (`compact_index`). Ids in the store's tombstone sidecar
+        are resolved out of the base — the physical half of
+        `tombstone_index_ids`; a store without one plans no extra
+        join."""
+        compact_index(
+            spark,
+            path,
+            self.schema,
+            lambda raw: _untombstoned(
+                spark, path, self.resolve(raw), self.key[0]
+            ),
+            range_col=self.range_col,
+            zone_cols=list(self.zone_cols),
+            target_file_bytes=target_file_bytes,
+        )
+
+
 _BAND_SCHEMA = "doc_id bigint, sig array<bigint>, band int, bkey string"
 _ANN_SCHEMA = "vec_id bigint, embedding array<float>, band int, bkey bigint"
+
+# The MinHash (doc_id) and ANN (vec_id) band stores, by id column: one
+# row per (id, band), id-disjoint deltas, probed by band key.
+BAND_STORES = {
+    id_col: Store(schema, (id_col, "band"), None, "bkey", ("bkey", id_col))
+    for id_col, schema in (("doc_id", _BAND_SCHEMA), ("vec_id", _ANN_SCHEMA))
+}
+# The ExactSubstr gram store: the smallest doc_id carrying each gram.
+GRAM_STORE = Store(
+    "h1 bigint, h2 bigint, min_doc bigint", ("h1", "h2"), "min_doc", "h1",
+    ("h1",),
+)
+# The CC label store: labels only decrease, so the min is the latest.
+CC_LABEL_STORE = Store(
+    "doc_id bigint, cluster_id bigint", ("doc_id",), "cluster_id", "doc_id",
+    ("doc_id",),
+)
+
+
+def id_store(id_col: str) -> Store:
+    """An id-set store: a band store's seen-ids sidecar (``_ids``) and
+    its tombstone sidecar (``_tombstones``)."""
+    return Store(f"{id_col} bigint", (id_col,), None, id_col, (id_col,))
 
 # Above this many distinct probe keys, a batch skips file pruning and
 # reads the store whole: the key-set collect is driver-side (bounded
@@ -100,9 +189,10 @@ PRUNE_MAX_KEYS = 65536
 # a real deployment uses the table format's target (128 MB class).
 COMPACT_TARGET_FILE_BYTES = 8 * 1024 * 1024
 
-# Writes recording (for the cumulative write-amplification
-# measurement): when set to a list, every delta append / compaction
-# write appends {"kind", "path", "bytes"}. Scripts only.
+# Writes recording: when set to a list, every delta append / compaction
+# write appends {"kind", "path", "bytes"}. Never set in library paths;
+# perfbench's tracing (`IngestHooks`, `store.bytes_written`) and
+# scripts/ingest_write_amp.py set it.
 WRITE_LOG: list | None = None
 
 # A just-staged delta whose TOTAL bytes are under this is folded into
@@ -179,8 +269,7 @@ def _load_index(
     the first batch. Band stores need no further resolution — their
     deltas are id-disjoint by construction (the append anti-joins on
     already-stored ids); min-merge stores (grams, CC labels) resolve
-    the monoid on top of this (`read_cc_labels`; the substring consumer
-    min-merges inline).
+    the monoid on top of this (`Store.resolve`).
 
     ``prune`` ({col: ("set", sorted_vals) | ("range", lo, hi)}) reads
     only the store files whose zone-manifest [min, max] can intersect
@@ -264,7 +353,7 @@ def _dir_bytes(path: str) -> int:
 def _append_delta(
     delta: DataFrame,
     index_path: str,
-    zone_cols: list[str] | None = None,
+    zone_cols: Sequence[str] | None = None,
 ) -> None:
     """Persist ONE batch's store delta as a new `ver=N` partition dir.
     The delta is written to a sibling staging dir first, then a SINGLE
@@ -292,16 +381,26 @@ def _append_delta(
     and `_fold_small_delta_files` folds a tiny delta into one file."""
     tmp = f"{index_path}__delta_{uuid.uuid4().hex[:8]}"
     _rebalanced(delta).write.mode("overwrite").parquet(tmp)
-    _fold_small_delta_files(tmp)
+    _publish(tmp, index_path, zone_cols)
+
+
+def _publish(
+    staged: str, index_path: str, zone_cols: Sequence[str] | None
+) -> None:
+    """Make a staged delta dir visible as ``index_path``'s next
+    `ver=N`: fold a tiny delta into one file, rename the dir into the
+    store (the one visibility step), log the write, then record the new
+    files' ``zone_cols`` zones from their footers."""
+    _fold_small_delta_files(staged)
     os.makedirs(index_path, exist_ok=True)
     dest = os.path.join(index_path, f"ver={_next_ver(index_path)}")
-    os.replace(tmp, dest)
+    os.replace(staged, dest)
     if WRITE_LOG is not None:
         WRITE_LOG.append(
             {"kind": "delta", "path": index_path, "bytes": _dir_bytes(dest)}
         )
     if zone_cols:
-        update_zones(index_path, zone_cols)
+        update_zones(index_path, list(zone_cols))
 
 
 def _append_landing_and_deltas(
@@ -337,7 +436,8 @@ def _append_landing_and_deltas(
 
     After each store's files become visible, its zone manifest records
     them from their own footers (`zones.update_zones`): ``id_col`` for
-    all three, plus ``bkey`` for the band store.
+    the landing, the declared zones (`BAND_STORES`, `id_store`) for
+    the two stores.
 
     Readers are unaffected by the union schema: every catalog/ids
     consumer reads with an explicit schema (extra file columns are
@@ -386,22 +486,13 @@ def _append_landing_and_deltas(
                     os.path.join(out_path, dest_fn),
                 )
             update_zones(out_path, [id_col])
-        for store, path, zone_cols in (
-            ("band", band_path, [id_col, "bkey"]),
-            ("ids", ids_path, [id_col]),
+        for store, path, declared in (
+            ("band", band_path, BAND_STORES[id_col]),
+            ("ids", ids_path, id_store(id_col)),
         ):
             src = os.path.join(tmp, f"__store={store}")
-            if not os.path.isdir(src):
-                continue  # empty side (e.g. a replayed batch)
-            _fold_small_delta_files(src)
-            os.makedirs(path, exist_ok=True)
-            dest = os.path.join(path, f"ver={_next_ver(path)}")
-            os.replace(src, dest)
-            if WRITE_LOG is not None:
-                WRITE_LOG.append(
-                    {"kind": "delta", "path": path, "bytes": _dir_bytes(dest)}
-                )
-            update_zones(path, zone_cols)
+            if os.path.isdir(src):  # else an empty side (a replay)
+                _publish(src, path, declared.zone_cols)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -411,8 +502,8 @@ def read_cc_labels(spark: SparkSession, labels_path: str) -> DataFrame:
     only ever DECREASE (a merge relabels to the min of the merged
     roots), so min-per-doc over the appended history IS the latest
     label — one combinable aggregate, no version bookkeeping."""
-    raw = _load_index(spark, labels_path, "doc_id bigint, cluster_id bigint")
-    return raw.groupBy("doc_id").agg(F.min("cluster_id").alias("cluster_id"))
+    raw = _load_index(spark, labels_path, CC_LABEL_STORE.schema)
+    return CC_LABEL_STORE.resolve(raw)
 
 
 def compact_index(
@@ -505,32 +596,19 @@ def store_bytes(index_path: str) -> tuple[int, int]:
 COMPACT_RATIO = 1.0
 
 
-def maybe_compact(
-    spark: SparkSession,
-    index_path: str,
-    schema: str,
-    resolve,
-    range_col: str | None = None,
-    zone_cols: list[str] | None = None,
-) -> bool:
+def maybe_compact(spark: SparkSession, index_path: str, store: Store) -> bool:
     """Size-tiered compaction trigger (the LSM doubling rule): fold the
     deltas iff their bytes reach ``COMPACT_RATIO`` × the base's. With a
     ratio of 1 the base at least doubles per compaction, so there are at
     most log2(store) compactions over a table's life and TOTAL compaction
     write volume is bounded by ~2× the final store — amortized O(1)
     extra bytes per byte ingested, i.e. cumulative ingest I/O stays
-    linear even WITH the periodic folds. Returns True if it
-    compacted."""
+    linear even WITH the periodic folds. The fold is the declared one
+    (`Store.compact`), so an auto-compacted base equals an explicitly
+    compacted one. Returns True if it compacted."""
     base, delta = store_bytes(index_path)
     if delta and delta >= COMPACT_RATIO * max(base, 1):
-        compact_index(
-            spark,
-            index_path,
-            schema,
-            resolve,
-            range_col=range_col,
-            zone_cols=zone_cols,
-        )
+        store.compact(spark, index_path)
         return True
     return False
 
@@ -549,10 +627,11 @@ def tombstone_index_ids(
     - candidate generation drops the ids immediately — the per-batch
       index loads anti-join the tombstones (`_load_band_index`), so no
       future pair involves a deleted doc;
-    - compaction physically removes their band rows
-      (`compact_band_index` resolves the tombstone anti-join into the
-      base), after which the store equals a fresh rebuild over the
-      corpus minus the deleted docs (pytest-pinned);
+    - compaction physically removes their band rows (every fold of
+      the store, `compact_band_index` or ``auto_compact``, resolves the
+      tombstone anti-join into the base — `Store.compact`), after
+      which the store equals a fresh rebuild over the corpus minus the
+      deleted docs (pytest-pinned);
     - the SEEN-ids sidecar deliberately KEEPS the id: a replay of the
       original batch must stay a no-op, not resurrect the document's
       band rows. Re-sending a tombstoned id in a new batch is likewise
@@ -564,32 +643,34 @@ def tombstone_index_ids(
     _append_delta(
         ids_df.select(id_col).distinct(),
         index_path + "_tombstones",
-        zone_cols=[id_col],
+        zone_cols=id_store(id_col).zone_cols,
     )
+
+
+def _untombstoned(
+    spark: SparkSession, index_path: str, df: DataFrame, id_col: str
+) -> DataFrame:
+    """``df`` minus the ids in ``index_path``'s tombstone sidecar
+    (`tombstone_index_ids`). The sidecar is id-sized, so the anti-join
+    build side is tiny and AQE broadcasts it; it is read only when it
+    exists (driver-side listing) — a store without deletes plans no
+    extra join."""
+    tomb_path = index_path + "_tombstones"
+    if not os.path.isdir(tomb_path):
+        return df
+    tombs = _load_index(spark, tomb_path, id_store(id_col).schema)
+    return _minus(df, tombs, id_col)
 
 
 def _load_band_index(
-    spark: SparkSession,
-    index_path: str,
-    schema: str,
-    id_col: str,
-    prune: dict | None,
+    spark: SparkSession, index_path: str, store: Store, prune: dict | None
 ) -> DataFrame:
     """Candidate-index load = pruned store read minus tombstoned ids
-    (the read-time resolution of `tombstone_index_ids`; the tombstone
-    store is id-sized, so the extra anti-join build side is tiny and
-    AQE broadcasts it). The anti-join is planned only when a tombstone
-    store exists (driver-side listing) — the common no-deletes batch
-    pays nothing."""
+    (the read-time resolution of `tombstone_index_ids`)."""
     index = _load_index(
-        spark, index_path, schema, prune=prune, log_label=index_path
+        spark, index_path, store.schema, prune=prune, log_label=index_path
     )
-    if not os.path.isdir(index_path + "_tombstones"):
-        return index
-    tombs = _load_index(
-        spark, index_path + "_tombstones", f"{id_col} bigint"
-    )
-    return _minus(index, tombs, id_col)
+    return _untombstoned(spark, index_path, index, store.key[0])
 
 
 def compact_band_index(
@@ -598,42 +679,22 @@ def compact_band_index(
     id_col: str = "doc_id",
     schema: str = _BAND_SCHEMA,
 ) -> None:
-    """Compaction for MinHash/ANN band stores. Deltas are id-disjoint by
-    construction, so the natural-key dedup is defensive only (exact
-    replays of a crashed append). The base is range-partitioned and
-    sorted by ``bkey`` (the candidate-join probe) with per-file
-    (bkey, id) zones, so the next batch's pruned read opens only the
-    files its band keys can live in. Tombstoned ids
+    """Compaction for MinHash/ANN band stores (`BAND_STORES`; ``schema``
+    is the band rows' columns, `_ANN_SCHEMA` for an ANN store). Deltas
+    are id-disjoint by construction, so the natural-key dedup is
+    defensive only (exact replays of a crashed append). The base is
+    range-partitioned and sorted by ``bkey`` (the candidate-join probe)
+    with per-file (bkey, id) zones, so the next batch's pruned read
+    opens only the files its band keys can live in. Tombstoned ids
     (`tombstone_index_ids`) are resolved OUT of the base here — the
     physical half of index deletion."""
-    tombs = _load_index(
-        spark, index_path + "_tombstones", f"{id_col} bigint"
-    )
-    compact_index(
-        spark,
-        index_path,
-        schema,
-        lambda df: df.dropDuplicates([id_col, "band"]).join(
-            tombs, id_col, "left_anti"
-        ),
-        range_col="bkey",
-        zone_cols=["bkey", id_col],
-    )
+    replace(BAND_STORES[id_col], schema=schema).compact(spark, index_path)
 
 
 def compact_substring_index(spark: SparkSession, index_path: str) -> None:
     """Compaction for the ExactSubstr gram store: min-merge per gram,
     base range-partitioned/sorted by ``h1`` (the batch-gram probe)."""
-    compact_index(
-        spark,
-        index_path,
-        "h1 bigint, h2 bigint, min_doc bigint",
-        lambda df: df.groupBy("h1", "h2").agg(
-            F.min("min_doc").alias("min_doc")
-        ),
-        range_col="h1",
-        zone_cols=["h1"],
-    )
+    GRAM_STORE.compact(spark, index_path)
 
 
 def compact_cc_labels(spark: SparkSession, labels_path: str) -> None:
@@ -641,16 +702,7 @@ def compact_cc_labels(spark: SparkSession, labels_path: str) -> None:
     Sorted by doc_id with zones for point lookups; the per-batch ingest
     still reads the resolved view whole — contraction is a global
     fixpoint (see the module docstring)."""
-    compact_index(
-        spark,
-        labels_path,
-        "doc_id bigint, cluster_id bigint",
-        lambda df: df.groupBy("doc_id").agg(
-            F.min("cluster_id").alias("cluster_id")
-        ),
-        range_col="doc_id",
-        zone_cols=["doc_id"],
-    )
+    CC_LABEL_STORE.compact(spark, labels_path)
 
 
 # Below this many store data files, batches skip the key-set probe and
@@ -735,41 +787,66 @@ def _key_set_probe(
     return {key_col: ("set", sorted(r[0] for r in rows))}
 
 
-def _batch_id_range(batch: DataFrame, id_col: str) -> tuple[int, int]:
-    """(min, max) id of the batch — the probe range for the seen-ids
-    and landed-catalog pruned reads; (None, None) for an empty batch.
-    One small aggregation per micro-batch (1 job with AQE off; 2 with
-    AQE on, see `_dedup_ingest`): the frame Spark hands
+def _fresh_batches(stream: DataFrame, cols: list[str], body):
+    """The un-started foreachBatch writeStream every id-keyed ingest
+    shares. Each micro-batch is projected to ``cols``, deduplicated on
+    its id ``cols[0]`` and checkpointed, then probed for its (min, max)
+    id in one aggregation; an empty batch ends there, any other goes to
+    ``body(batch, ids)`` with ``ids = {id: ("range", lo, hi)}`` — the
+    zone probe for the seen-ids and landed-catalog reads.
+
+    The checkpoint is shared by every read of the batch in ``body``
+    (one scan + dedup, not one per action). It is not lazy under AQE
+    (foreachBatch frames keep the session's AQE): building it runs the
+    dropDuplicates shuffle-map stage as 1 job, and the id-range agg
+    then runs 2 (the dedup reduce, then the agg). With AQE off the
+    build runs nothing and the agg is 1 job. Measured per micro-batch
+    at sf0.01 in a get_spark session. The frame Spark hands
     ``foreachBatch`` has no file-scan leaves (``inputFiles()`` is
-    empty), so footer statistics cannot bound it."""
-    r = batch.agg(
-        F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
-    ).first()
-    return r["lo"], r["hi"]
+    empty), so footer statistics cannot bound the range."""
+    id_col = cols[0]
+
+    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        batch = (
+            batch_df.select(*cols)
+            .dropDuplicates([id_col])
+            .localCheckpoint(eager=False)
+        )
+        lo, hi = batch.agg(F.min(id_col), F.max(id_col)).first()
+        if lo is not None:
+            body(batch, {id_col: ("range", lo, hi)})
+
+    return stream.writeStream.foreachBatch(process_batch)
 
 
-def _load_catalog_pruned(
-    spark: SparkSession, out_path: str, id_col: str, lo: int, hi: int
-) -> DataFrame | None:
-    """Landed-keys catalog restricted to the sink files whose id zones
-    intersect the batch's [lo, hi] — the ST2 anti-join only needs keys
-    that COULD collide with a batch row, and ids outside the batch
-    range provably cannot. Sound without any arrival-order contract:
+def _unlanded(kept: DataFrame, out_path: str, ids: dict) -> DataFrame:
+    """``kept`` minus the ids already landed at ``out_path`` — the ST2
+    exactly-once anti-join, so a replayed batch (foreachBatch is
+    at-least-once) lands zero rows. Only the sink files whose id zones
+    intersect the batch's id range ``ids`` are read: ids outside it
+    provably cannot collide. Sound without any arrival-order contract:
     unmanifested files (e.g. a landing append that crashed before its
     zone update) are always read. Under id-ordered arrival a fresh
-    batch prunes to ~zero files and a replay touches only its own
-    prior landing — the cumulative-read fix of VERDICT r10 #1. None if
-    nothing can match (no sink yet, or every file skipped)."""
-    files = select_pruned_files(
-        out_path, {id_col: ("range", lo, hi)}, log_label=out_path
-    )
-    if not files:
-        return None
-    return (
-        spark.read.schema(f"{id_col} bigint")
+    batch prunes to ~zero files and a replay touches only its own prior
+    landing — the cumulative-read fix of VERDICT r10 #1."""
+    files = select_pruned_files(out_path, ids, log_label=out_path)
+    if not files:  # no sink yet, or no file can hold a batch id
+        return kept
+    (id_col,) = ids
+    landed = (
+        kept.sparkSession.read.schema(f"{id_col} bigint")
         .parquet(*files)
         .dropDuplicates([id_col])
     )
+    return kept.join(landed, [id_col], "left_anti")
+
+
+def _land(kept: DataFrame, out_path: str, ids: dict) -> None:
+    """Exactly-once landing: append ``kept``'s not-yet-landed rows
+    (`_unlanded`) to the sink at ``out_path`` and record the new files'
+    id zones from their footers."""
+    _unlanded(kept, out_path, ids).write.mode("append").parquet(out_path)
+    update_zones(out_path, list(ids))
 
 
 def _dedup_ingest(
@@ -778,7 +855,6 @@ def _dedup_ingest(
     out_path: str,
     id_col: str,
     payload_cols: list[str],
-    index_schema: str,
     update_fn,
     auto_compact: bool = False,
 ):
@@ -800,7 +876,7 @@ def _dedup_ingest(
       store's fat sig rows), read pruned to the batch's id range; under
       id-ordered arrival a fresh batch opens ~zero files;
     - the ST2 landed catalog is read pruned to the batch's id range
-      (`_load_catalog_pruned`).
+      (`_unlanded`).
     Each prune is sound unconditionally (skipped files provably hold no
     probe key; unmanifested files are always read), so the landed set
     and stored index are bit-identical to the full-scan plan
@@ -829,43 +905,19 @@ def _dedup_ingest(
 
     ``auto_compact``: fold the deltas whenever their bytes reach the
     base's (`maybe_compact` — the LSM doubling rule, amortized O(1)
-    extra write bytes per ingested byte). Off by default so delta
+    extra write bytes per ingested byte). Both stores fold as declared
+    (`BAND_STORES`, `id_store`): the same base `compact_band_index`
+    writes, tombstoned ids removed. Off by default so delta
     boundaries stay inspectable (the write-volume tests and the
     measurement script read per-ver sizes); a production deployment
     turns it on or compacts on a maintenance schedule."""
-    id_key = [id_col, "band"]
-    ids_path = index_path + "_ids"
-    ids_schema = f"{id_col} bigint"
+    store, ids_path = BAND_STORES[id_col], index_path + "_ids"
+    ids_store = id_store(id_col)
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # checkpoint the deduped batch: it feeds the band table, the
-        # landing write AND the ids delta — one scan+dedup
-        # materialization shared by all three instead of re-running
-        # per action (the ids append was re-paying the batch shuffle).
-        # The checkpoint is not lazy under AQE (foreachBatch frames keep
-        # the session's AQE): building it runs the dropDuplicates
-        # shuffle-map stage as 1 job, and the id-range agg below then
-        # runs 2 (the dedup reduce, then the agg). With AQE off the
-        # build runs nothing and the agg is 1 job. Measured per
-        # micro-batch at sf0.01 in a get_spark session; the batch is
-        # scanned and deduplicated once either way.
-        batch = (
-            batch_df.select(id_col, *payload_cols)
-            .dropDuplicates([id_col])
-            .localCheckpoint(eager=False)
-        )
-        # emptiness check + id-range probe in one aggregation (it also
-        # finishes materializing the checkpoint the later steps reuse)
-        lo, hi = _batch_id_range(batch, id_col)
-        if lo is None:
-            return
+    def body(batch: DataFrame, ids: dict) -> None:
+        spark = batch.sparkSession
         seen = _load_index(
-            spark,
-            ids_path,
-            ids_schema,
-            prune={id_col: ("range", lo, hi)},
-            log_label=ids_path,
+            spark, ids_path, ids_store.schema, prune=ids, log_label=ids_path
         )
         pairs, delta = update_fn(spark, batch, seen)
         # drop rule: a row is a duplicate iff it is the LARGER id of any
@@ -873,11 +925,7 @@ def _dedup_ingest(
         larger = pairs.columns[1]  # doc_b / vec_b
         dup_ids = pairs.select(F.col(larger).alias(id_col)).distinct()
         kept = batch.join(dup_ids, id_col, "left_anti")
-        # ST2 exactly-once landing: anti-join against landed keys so a
-        # replayed batch (foreachBatch is at-least-once) lands zero rows
-        landed = _load_catalog_pruned(spark, out_path, id_col, lo, hi)
-        if landed is not None:
-            kept = kept.join(landed, [id_col], "left_anti")
+        kept = _unlanded(kept, out_path, ids)
         # ONE write job for the landing AND both deltas (band rows +
         # seen-ids sidecar); zone maintenance stays DRIVER-SIDE (the
         # new files' footer ranges). The ids delta comes from the
@@ -898,24 +946,10 @@ def _dedup_ingest(
             id_col,
         )
         if auto_compact:
-            maybe_compact(
-                spark,
-                index_path,
-                index_schema,
-                lambda df: df.dropDuplicates(id_key),
-                range_col="bkey",
-                zone_cols=["bkey", id_col],
-            )
-            maybe_compact(
-                spark,
-                ids_path,
-                ids_schema,
-                lambda df: df.dropDuplicates([id_col]),
-                range_col=id_col,
-                zone_cols=[id_col],
-            )
+            maybe_compact(spark, index_path, store)
+            maybe_compact(spark, ids_path, ids_store)
 
-    return stream.writeStream.foreachBatch(process_batch)
+    return _fresh_batches(stream, [id_col, *payload_cols], body)
 
 
 def minhash_dedup_ingest(
@@ -946,7 +980,7 @@ def minhash_dedup_ingest(
             bands_df, "bkey", index_path, overflow_state=probe_state
         )
         index = _load_band_index(
-            spark, index_path, _BAND_SCHEMA, "doc_id", probe
+            spark, index_path, BAND_STORES["doc_id"], probe
         )
         pairs, _ = minhash_index_update(
             batch, index, k, num_hashes, bands, threshold,
@@ -961,7 +995,6 @@ def minhash_dedup_ingest(
         out_path,
         "doc_id",
         ["text"],
-        _BAND_SCHEMA,
         update,
         auto_compact=auto_compact,
     )
@@ -997,7 +1030,7 @@ def ann_dedup_ingest(
             bands_df, "bkey", index_path, overflow_state=probe_state
         )
         index = _load_band_index(
-            spark, index_path, _ANN_SCHEMA, "vec_id", probe
+            spark, index_path, BAND_STORES["vec_id"], probe
         )
         pairs, _ = ann_index_update(
             batch, index, n_bands, band_bits, threshold, new_bands=bands_df
@@ -1011,7 +1044,6 @@ def ann_dedup_ingest(
         out_path,
         "vec_id",
         ["embedding"],
-        _ANN_SCHEMA,
         update,
         auto_compact=auto_compact,
     )
@@ -1056,39 +1088,13 @@ def run_writer_available_now(
         )
         q.awaitTermination()
         if durations_key is not None:
-            try:
-                import json as _json
+            from .windows import LAST_RUN_DURATIONS, summed_durations
 
-                from .windows import LAST_RUN_DURATIONS
-
-                phases: dict[str, int] = {}
-                for p in q.recentProgress:
-                    d = _json.loads(p.json) if hasattr(p, "json") else p
-                    for k, v in (d.get("durationMs") or {}).items():
-                        phases[k] = phases.get(k, 0) + int(v)
-                LAST_RUN_DURATIONS[durations_key] = phases
-            except Exception:
-                pass
+            LAST_RUN_DURATIONS[durations_key] = summed_durations(q)
     finally:
         if spark:
             spark.conf.set(part_key, prev_parts)
             spark.conf.set(nodata_key, prev_nodata)
-
-
-def run_ingest_available_now(
-    doc_stream: DataFrame,
-    index_path: str,
-    out_path: str,
-    checkpoint: str,
-    durations_key: str | None = None,
-    **kwargs,
-) -> None:
-    """MinHash ingest over everything currently staged (ST4 shape)."""
-    run_writer_available_now(
-        minhash_dedup_ingest(doc_stream, index_path, out_path, **kwargs),
-        checkpoint,
-        durations_key=durations_key,
-    )
 
 
 # Landing schemas: exactly what each ingest's landed frame writes, so a
@@ -1126,20 +1132,9 @@ def decontaminate_ingest(
         .localCheckpoint(eager=True)
     )
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # checkpoint the deduped batch, shared by the gram explode and
-        # both text reads of the landing plan; the build (under AQE)
-        # and the id-range agg below materialize it (same discipline
-        # and job split as _dedup_ingest)
-        batch = (
-            batch_df.select("doc_id", "text")
-            .dropDuplicates(["doc_id"])
-            .localCheckpoint(eager=False)
-        )
-        lo, hi = _batch_id_range(batch, "doc_id")
-        if lo is None:
-            return
+    def body(batch: DataFrame, ids: dict) -> None:
+        # the checkpointed batch feeds the gram explode and both text
+        # reads of the landing plan
         grams = batch.select(
             "doc_id", F.explode(word_ngrams(F.col("text"), n)).alias("ngram")
         ).dropDuplicates(["doc_id", "ngram"])
@@ -1155,13 +1150,9 @@ def decontaminate_ingest(
                 F.size(word_ngrams(F.col("text"), n)).alias("n_ngrams"),
             )
         )
-        landed = _load_catalog_pruned(spark, out_path, "doc_id", lo, hi)
-        if landed is not None:
-            kept = kept.join(landed, ["doc_id"], "left_anti")
-        kept.write.mode("append").parquet(out_path)
-        update_zones(out_path, ["doc_id"])
+        _land(kept, out_path, ids)
 
-    return doc_stream.writeStream.foreachBatch(process_batch)
+    return _fresh_batches(doc_stream, ["doc_id", "text"], body)
 
 
 QUALITY_KEPT_SCHEMA = "doc_id bigint, n_chars int"
@@ -1194,19 +1185,8 @@ def quality_route_ingest(
     lands zero rows on both paths."""
     from ..functions.text import tokens
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # checkpoint the deduped batch, which both routed sides read;
-        # the build (under AQE) and the id-range agg materialize it
-        # (same discipline and job split as _dedup_ingest)
-        batch = (
-            batch_df.select("doc_id", "text")
-            .dropDuplicates(["doc_id"])
-            .localCheckpoint(eager=False)
-        )
-        lo, hi = _batch_id_range(batch, "doc_id")
-        if lo is None:
-            return
+    def body(batch: DataFrame, ids: dict) -> None:
+        # both routed sides read the checkpointed batch
         w = tokens(F.lower(F.col("text")))
         n = F.size(w)
         nd = F.size(F.array_distinct(w))
@@ -1218,18 +1198,11 @@ def quality_route_ingest(
         routed = batch.select(
             "doc_id", F.length("text").alias("n_chars"), reason.alias("reason")
         )
-        for path, frame in (
-            (kept_path, routed.where(F.col("reason").isNull()).drop("reason")),
-            (rejects_path, routed.where(F.col("reason").isNotNull())),
-        ):
-            landed = _load_catalog_pruned(spark, path, "doc_id", lo, hi)
-            out = frame
-            if landed is not None:
-                out = out.join(landed, ["doc_id"], "left_anti")
-            out.write.mode("append").parquet(path)
-            update_zones(path, ["doc_id"])
+        ok = F.col("reason").isNull()
+        _land(routed.where(ok).drop("reason"), kept_path, ids)
+        _land(routed.where(~ok), rejects_path, ids)
 
-    return doc_stream.writeStream.foreachBatch(process_batch)
+    return _fresh_batches(doc_stream, ["doc_id", "text"], body)
 
 
 def cc_label_ingest(
@@ -1269,8 +1242,8 @@ def cc_label_ingest(
         # member/edge sides 3×) and COUNT it instead of isEmpty(): the
         # count finishes the checkpoint's materialization (under AQE
         # the build already ran the dedup shuffle, as in
-        # _dedup_ingest: 1 job at build, 2 for the count; with AQE off
-        # 0 and 1), doubles as the emptiness gate, and its value
+        # `_fresh_batches`: 1 job at build, 2 for the count; with AQE
+        # off 0 and 1), doubles as the emptiness gate, and its value
         # bounds the contracted graph
         # (≤ batch pairs) — passed down so dup_clusters skips the
         # strategy count() that otherwise executed the whole
@@ -1296,16 +1269,9 @@ def cc_label_ingest(
             )
             .select("doc_id", "cluster_id")
         )
-        _append_delta(delta, labels_path)
+        _append_delta(delta, labels_path, CC_LABEL_STORE.zone_cols)
         if auto_compact:
-            maybe_compact(
-                spark,
-                labels_path,
-                "doc_id bigint, cluster_id bigint",
-                lambda df: df.groupBy("doc_id").agg(
-                    F.min("cluster_id").alias("cluster_id")
-                ),
-            )
+            maybe_compact(spark, labels_path, CC_LABEL_STORE)
 
     return pair_stream.writeStream.foreachBatch(process_batch)
 
@@ -1356,23 +1322,10 @@ def substring_dedup_ingest(
     dup_chars)."""
     from ..operators.corpus import char_gram_hashes, merged_span_lengths
 
-    schema = "h1 bigint, h2 bigint, min_doc bigint"
     probe_state: dict = {}
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # checkpoint the deduped batch, which the gram explode and the
-        # stats projection both read; the build (under AQE) and the
-        # id-range agg materialize it (same discipline and job split
-        # as _dedup_ingest)
-        batch = (
-            batch_df.select("doc_id", "text")
-            .dropDuplicates(["doc_id"])
-            .localCheckpoint(eager=False)
-        )
-        lo, hi = _batch_id_range(batch, "doc_id")
-        if lo is None:
-            return
+    def body(batch: DataFrame, ids: dict) -> None:
+        spark = batch.sparkSession
         # ONE gram-table shuffle per batch under STATIC planning:
         # hash-partition the grams by their key BEFORE the shared
         # checkpoint — localCheckpoint preserves the partitioning, so
@@ -1431,7 +1384,7 @@ def substring_dedup_ingest(
         store = _load_index(
             spark,
             index_path,
-            schema,
+            GRAM_STORE.schema,
             prune=h_probe,
             log_label=index_path,
         )
@@ -1450,8 +1403,8 @@ def substring_dedup_ingest(
                 "stored_min", F.lit(None).cast("bigint")
             ).localCheckpoint(eager=False)
         else:
-            stored = store.groupBy("h1", "h2").agg(
-                F.min("min_doc").alias("stored_min")
+            stored = GRAM_STORE.resolve(store).withColumnRenamed(
+                "min_doc", "stored_min"
             )
             joined = firsts.join(
                 stored, ["h1", "h2"], "left"
@@ -1490,11 +1443,7 @@ def substring_dedup_ingest(
             F.col("dup_chars").cast("double")
             < F.lit(max_dup_ratio) * F.col("n_chars")
         )
-        landed = _load_catalog_pruned(spark, out_path, "doc_id", lo, hi)
-        if landed is not None:
-            kept = kept.join(landed, ["doc_id"], "left_anti")
-        kept.write.mode("append").parquet(out_path)
-        update_zones(out_path, ["doc_id"])
+        _land(kept, out_path, ids)
         # append the delta: grams the store has never seen (or — only
         # off the id-ordered contract — seen with a larger min_doc).
         # On replay every batch gram is already stored with the same
@@ -1505,17 +1454,8 @@ def substring_dedup_ingest(
             F.col("stored_min").isNull()
             | (F.col("min_doc") < F.col("stored_min"))
         ).select("h1", "h2", "min_doc")
-        _append_delta(delta, index_path, zone_cols=["h1"])
+        _append_delta(delta, index_path, GRAM_STORE.zone_cols)
         if auto_compact:
-            maybe_compact(
-                spark,
-                index_path,
-                schema,
-                lambda df: df.groupBy("h1", "h2").agg(
-                    F.min("min_doc").alias("min_doc")
-                ),
-                range_col="h1",
-                zone_cols=["h1"],
-            )
+            maybe_compact(spark, index_path, GRAM_STORE)
 
-    return doc_stream.writeStream.foreachBatch(process_batch)
+    return _fresh_batches(doc_stream, ["doc_id", "text"], body)

@@ -204,6 +204,27 @@ LAST_RUN_DURATIONS: dict[str, dict[str, int]] = {}
 LAST_RUN_STATE: dict[str, list[dict]] = {}
 
 
+def _progress(q) -> list[dict]:
+    """The query's recent progress records (Spark keeps the last 100
+    micro-batches) as dicts."""
+    import json
+
+    return [
+        json.loads(p.json) if hasattr(p, "json") else p
+        for p in q.recentProgress
+    ]
+
+
+def summed_durations(q) -> dict[str, int]:
+    """Each ``durationMs`` phase of query ``q`` summed over its recent
+    micro-batches — the per-sink entry of `LAST_RUN_DURATIONS`."""
+    phases: dict[str, int] = {}
+    for d in _progress(q):
+        for k, v in (d.get("durationMs") or {}).items():
+            phases[k] = phases.get(k, 0) + int(v)
+    return phases
+
+
 def start_to_memory(
     stream_df: DataFrame,
     name: str,
@@ -282,13 +303,11 @@ def finish_to_memory(q, name: str, finalize: bool, ckpt: str | None):
         # (fired before the source listed the file) also has
         # numInputRows == 0 and must not satisfy the wait.
         if finalize:
-            import json as _json
             import time
 
             def _saw_final_no_data_batch() -> bool:
                 seen_data = False
-                for p in q.recentProgress:
-                    d = _json.loads(p.json) if hasattr(p, "json") else p
+                for d in _progress(q):
                     rows = d.get("numInputRows", -1)
                     if rows > 0:
                         seen_data = True
@@ -306,14 +325,8 @@ def finish_to_memory(q, name: str, finalize: bool, ckpt: str | None):
         # across micro-batches, keyed by sink name, BEFORE stop() drops
         # the progress buffer.
         try:
-            import json as _json2
-
-            phases: dict[str, int] = {}
             state_batches: list[dict] = []
-            for p in q.recentProgress:
-                d = _json2.loads(p.json) if hasattr(p, "json") else p
-                for k, v in (d.get("durationMs") or {}).items():
-                    phases[k] = phases.get(k, 0) + int(v)
+            for d in _progress(q):
                 if d.get("stateOperators"):
                     state_batches.append(
                         {
@@ -322,7 +335,7 @@ def finish_to_memory(q, name: str, finalize: bool, ckpt: str | None):
                             "operators": d["stateOperators"],
                         }
                     )
-            LAST_RUN_DURATIONS[name] = phases
+            LAST_RUN_DURATIONS[name] = summed_durations(q)
             LAST_RUN_STATE[name] = state_batches
         except Exception:
             pass

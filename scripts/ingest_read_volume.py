@@ -91,36 +91,10 @@ def run_family(spark, docs, family, preload_docs):
 
         drive()
         if family == "minhash":
-            ing.compact_index(
-                spark,
-                f"{base}/idx",
-                ing._BAND_SCHEMA,
-                lambda df: df.dropDuplicates(["doc_id", "band"]),
-                range_col="bkey",
-                zone_cols=["bkey", "doc_id"],
-                target_file_bytes=TARGET,
-            )
-            ing.compact_index(
-                spark,
-                f"{base}/idx_ids",
-                "doc_id bigint",
-                lambda df: df.dropDuplicates(["doc_id"]),
-                range_col="doc_id",
-                zone_cols=["doc_id"],
-                target_file_bytes=TARGET,
-            )
+            ing.BAND_STORES["doc_id"].compact(spark, f"{base}/idx", TARGET)
+            ing.id_store("doc_id").compact(spark, f"{base}/idx_ids", TARGET)
         else:
-            ing.compact_index(
-                spark,
-                f"{base}/idx",
-                "h1 bigint, h2 bigint, min_doc bigint",
-                lambda df: df.groupBy("h1", "h2").agg(
-                    F.min("min_doc").alias("min_doc")
-                ),
-                range_col="h1",
-                zone_cols=["h1"],
-                target_file_bytes=TARGET,
-            )
+            ing.GRAM_STORE.compact(spark, f"{base}/idx", TARGET)
         stage_slice(
             grown, preload_docs, preload_docs + BATCH,
             f"{base}/stage/b1.parquet",

@@ -51,7 +51,8 @@ def test_minhash_ingest_delta_volume_is_batch_sized(spark):
     count equals that batch's own band rows (bands × batch docs) — not
     the cumulative store. Bytes written per batch ∝ batch."""
     from kommunedata_data_pipeline_spark.streaming.ingest import (
-        run_ingest_available_now,
+        minhash_dedup_ingest,
+        run_writer_available_now,
     )
 
     docs = (
@@ -68,9 +69,17 @@ def test_minhash_ingest_delta_volume_is_batch_sized(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{base}/stage")
         )
-        run_ingest_available_now(
-            stream, f"{base}/index", f"{base}/landed", f"{base}/ckpt",
-            k=3, num_hashes=16, bands=4, threshold=0.5,
+        run_writer_available_now(
+            minhash_dedup_ingest(
+                stream,
+                f"{base}/index",
+                f"{base}/landed",
+                k=3,
+                num_hashes=16,
+                bands=4,
+                threshold=0.5,
+            ),
+            f"{base}/ckpt",
         )
         vers = sorted(
             n for n in os.listdir(f"{base}/index") if n.startswith("ver=")
@@ -157,7 +166,8 @@ def test_compaction_folds_store_and_ingest_continues(spark):
     )
     from kommunedata_data_pipeline_spark.streaming.ingest import (
         compact_band_index,
-        run_ingest_available_now,
+        minhash_dedup_ingest,
+        run_writer_available_now,
     )
 
     docs = (
@@ -182,9 +192,17 @@ def test_compaction_folds_store_and_ingest_continues(spark):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(f"{base}/stage")
             )
-            run_ingest_available_now(
-                stream, idx, landed, ckpt,
-                k=3, num_hashes=16, bands=4, threshold=0.5,
+            run_writer_available_now(
+                minhash_dedup_ingest(
+                    stream,
+                    idx,
+                    landed,
+                    k=3,
+                    num_hashes=16,
+                    bands=4,
+                    threshold=0.5,
+                ),
+                ckpt,
             )
 
         run()

@@ -53,7 +53,8 @@ def test_pruned_index_load_equals_full(spark):
     from kommunedata_data_pipeline_spark.streaming.ingest import (
         _BAND_SCHEMA,
         _load_index,
-        run_ingest_available_now,
+        minhash_dedup_ingest,
+        run_writer_available_now,
     )
 
     docs = (
@@ -69,8 +70,11 @@ def test_pruned_index_load_equals_full(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{base}/stage")
         )
-        run_ingest_available_now(
-            stream, f"{base}/idx", f"{base}/landed", f"{base}/ckpt"
+        run_writer_available_now(
+            minhash_dedup_ingest(
+                stream, f"{base}/idx", f"{base}/landed"
+            ),
+            f"{base}/ckpt",
         )
         # compact (range-partition by bkey + zones) with a tiny target
         # so the base splits into several files at toy scale
@@ -144,8 +148,11 @@ def test_ingest_batch_reads_are_pruned_and_results_unchanged(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{base}/stage")
         )
-        ing.run_ingest_available_now(
-            stream, f"{base}/idx", f"{base}/landed", f"{base}/ckpt"
+        ing.run_writer_available_now(
+            ing.minhash_dedup_ingest(
+                stream, f"{base}/idx", f"{base}/landed"
+            ),
+            f"{base}/ckpt",
         )
         # compact into many small range-partitioned files so a small
         # batch's band keys can skip most of them
@@ -183,8 +190,11 @@ def test_ingest_batch_reads_are_pruned_and_results_unchanged(spark):
         )
         Z.READ_LOG = []
         try:
-            ing.run_ingest_available_now(
-                stream2, f"{base}/idx", f"{base}/landed", f"{base}/ckpt"
+            ing.run_writer_available_now(
+                ing.minhash_dedup_ingest(
+                    stream2, f"{base}/idx", f"{base}/landed"
+                ),
+                f"{base}/ckpt",
             )
             by_label = {}
             for e in Z.READ_LOG:
@@ -237,8 +247,11 @@ def test_ingest_replay_lands_zero_and_appends_zero_rows_with_zones(spark):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(f"{base}/stage")
             )
-            ing.run_ingest_available_now(
-                stream, f"{base}/idx", f"{base}/landed", ck
+            ing.run_writer_available_now(
+                ing.minhash_dedup_ingest(
+                    stream, f"{base}/idx", f"{base}/landed"
+                ),
+                ck,
             )
 
         run(f"{base}/ck1")
@@ -276,8 +289,11 @@ def test_ingest_survives_deleted_zone_manifests(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{base}/stage")
         )
-        ing.run_ingest_available_now(
-            stream, f"{base}/idx", f"{base}/landed", f"{base}/ckpt"
+        ing.run_writer_available_now(
+            ing.minhash_dedup_ingest(
+                stream, f"{base}/idx", f"{base}/landed"
+            ),
+            f"{base}/ckpt",
         )
         for p in (f"{base}/idx", f"{base}/idx_ids", f"{base}/landed"):
             mf = os.path.join(p, ZONES_NAME)
@@ -292,8 +308,11 @@ def test_ingest_survives_deleted_zone_manifests(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{base}/stage")
         )
-        ing.run_ingest_available_now(
-            stream2, f"{base}/idx", f"{base}/landed", f"{base}/ckpt"
+        ing.run_writer_available_now(
+            ing.minhash_dedup_ingest(
+                stream2, f"{base}/idx", f"{base}/landed"
+            ),
+            f"{base}/ckpt",
         )
         pairs = minhash_lsh_pairs(docs, 3, 16, 4, 0.5)
         dup_b = {r.doc_b for r in pairs.select("doc_b").distinct().collect()}
@@ -619,8 +638,11 @@ def test_tombstone_removes_doc_from_candidate_generation(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{base}/stage")
         )
-        ing.run_ingest_available_now(
-            stream, f"{base}/idx", f"{base}/landed", f"{base}/ck1"
+        ing.run_writer_available_now(
+            ing.minhash_dedup_ingest(
+                stream, f"{base}/idx", f"{base}/landed"
+            ),
+            f"{base}/ck1",
         )
         # send a clone of the victim's text as a NEW larger id: dropped
         victim_text = docs.where(F.col("doc_id") == victim).first()["text"]
@@ -634,14 +656,16 @@ def test_tombstone_removes_doc_from_candidate_generation(spark):
             _g.glob(f"{base}/c1/part-*.parquet")[0],
             f"{base}/stage/b_clone1.parquet",
         )
-        ing.run_ingest_available_now(
-            (
-                spark.readStream.schema("doc_id bigint, text string")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(f"{base}/stage")
+        ing.run_writer_available_now(
+            ing.minhash_dedup_ingest(
+                (
+                    spark.readStream.schema("doc_id bigint, text string")
+                    .option("maxFilesPerTrigger", "1")
+                    .parquet(f"{base}/stage")
+                ),
+                f"{base}/idx",
+                f"{base}/landed",
             ),
-            f"{base}/idx",
-            f"{base}/landed",
             f"{base}/ck1",
         )
         landed = {
@@ -662,14 +686,16 @@ def test_tombstone_removes_doc_from_candidate_generation(spark):
             _g.glob(f"{base}/c2/part-*.parquet")[0],
             f"{base}/stage/b_clone2.parquet",
         )
-        ing.run_ingest_available_now(
-            (
-                spark.readStream.schema("doc_id bigint, text string")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(f"{base}/stage")
+        ing.run_writer_available_now(
+            ing.minhash_dedup_ingest(
+                (
+                    spark.readStream.schema("doc_id bigint, text string")
+                    .option("maxFilesPerTrigger", "1")
+                    .parquet(f"{base}/stage")
+                ),
+                f"{base}/idx",
+                f"{base}/landed",
             ),
-            f"{base}/idx",
-            f"{base}/landed",
             f"{base}/ck1",
         )
         landed = {
@@ -706,14 +732,16 @@ def test_tombstone_removes_doc_from_candidate_generation(spark):
         # appends nothing (the seen-ids sidecar still remembers victim)
         n_landed = spark.read.parquet(f"{base}/landed").count()
         n_idx = spark.read.parquet(f"{base}/idx").count()
-        ing.run_ingest_available_now(
-            (
-                spark.readStream.schema("doc_id bigint, text string")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(f"{base}/stage")
+        ing.run_writer_available_now(
+            ing.minhash_dedup_ingest(
+                (
+                    spark.readStream.schema("doc_id bigint, text string")
+                    .option("maxFilesPerTrigger", "1")
+                    .parquet(f"{base}/stage")
+                ),
+                f"{base}/idx",
+                f"{base}/landed",
             ),
-            f"{base}/idx",
-            f"{base}/landed",
             f"{base}/ck_replay",
         )
         assert spark.read.parquet(f"{base}/landed").count() == n_landed

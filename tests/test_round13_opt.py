@@ -82,8 +82,11 @@ def test_delta_pair_one_write_and_small_fold(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{base}/stage")
         )
-        ing.run_ingest_available_now(
-            stream, f"{base}/index", f"{base}/landed", f"{base}/ckpt"
+        ing.run_writer_available_now(
+            ing.minhash_dedup_ingest(
+                stream, f"{base}/index", f"{base}/landed"
+            ),
+            f"{base}/ckpt",
         )
         for store in (f"{base}/index", f"{base}/index_ids"):
             vers = sorted(

@@ -514,248 +514,3 @@ def test_dedup_within_watermark_ttl_reemission(spark, tmp_path):
     assert counts[1] == 2
     emitted_secs = sorted(int(r.ts.timestamp()) for r in rows if r.event_id == 1)
     assert emitted_secs == [100, 4600]
-
-
-def test_ingest_dedup_landed_set_invariant_under_batch_split(spark):
-    """Incremental ingest (streaming/ingest.py): for id-ordered batch
-    splits, the landed set must equal the batch-mode rule (doc never
-    appears as the larger id of a verified near-dup pair) — whether the
-    corpus arrives as ONE batch or THREE. Also pins that the persisted
-    index after the run equals the full band table over every ingested
-    doc (kept and dropped alike)."""
-    import glob
-    import os
-    import shutil
-
-    from kommunedata_data_pipeline_spark.operators.dedup import (
-        minhash_band_table,
-        minhash_lsh_pairs,
-    )
-    from kommunedata_data_pipeline_spark.streaming.ingest import (
-        run_ingest_available_now,
-    )
-
-    docs = (
-        load_table(spark, "/root/testdata/sf0.001", "documents")
-        .select("doc_id", "text")
-        .where(F.col("doc_id") < 90)
-    )
-    pairs = minhash_lsh_pairs(docs, 3, 16, 4, 0.5)
-    dup_b = {r.doc_b for r in pairs.select("doc_b").distinct().collect()}
-    want = {r.doc_id for r in docs.select("doc_id").collect()} - dup_b
-
-    def run(split_bounds):
-        base = tempfile.mkdtemp(
-            prefix="kdp-ingest-test-",
-            dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-        )
-        stage = f"{base}/stage"
-        os.makedirs(stage)
-        try:
-            lo = 0
-            for i, hi in enumerate(split_bounds):
-                part = f"{base}/p{i}"
-                docs.where(
-                    (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-                ).coalesce(1).write.mode("overwrite").parquet(part)
-                src = glob.glob(f"{part}/part-*.parquet")[0]
-                dst = f"{stage}/b{i}.parquet"
-                os.rename(src, dst)
-                os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-                lo = hi
-            stream = (
-                spark.readStream.schema("doc_id bigint, text string")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(stage)
-            )
-            run_ingest_available_now(
-                stream, f"{base}/index", f"{base}/landed", f"{base}/ckpt",
-                k=3, num_hashes=16, bands=4, threshold=0.5,
-            )
-            landed = {
-                r.doc_id
-                for r in spark.read.parquet(f"{base}/landed").collect()
-            }
-            idx = sorted(
-                (r["doc_id"], r["band"], r["bkey"])
-                for r in spark.read.parquet(f"{base}/index").collect()
-            )
-            return landed, idx
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
-
-    landed_one, idx_one = run([90])
-    landed_three, idx_three = run([30, 60, 90])
-    assert landed_one == want
-    assert landed_three == want
-    full_idx = sorted(
-        (r["doc_id"], r["band"], r["bkey"])
-        for r in minhash_band_table(docs, 3, 16, 4).collect()
-    )
-    assert idx_one == full_idx and idx_three == full_idx
-
-
-def test_ann_ingest_landed_set_invariant_under_batch_split(spark):
-    """ANN sibling of the ingest invariant: for id-ordered batch splits
-    the landed vector set equals the batch-mode rule (vec never appears
-    as the larger id of a verified near-dup pair), one batch or three;
-    and the persisted index equals the full band table."""
-    import glob
-    import os
-    import shutil
-
-    from kommunedata_data_pipeline_spark.operators.similarity import (
-        ann_band_table,
-        embedding_near_dup_pairs_banded,
-    )
-    from kommunedata_data_pipeline_spark.streaming.ingest import (
-        ann_dedup_ingest,
-        run_writer_available_now,
-    )
-
-    vecs = (
-        load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        .select("vec_id", "embedding")
-        .where(F.col("vec_id") < 45)
-    )
-    pairs = embedding_near_dup_pairs_banded(vecs, n_bands=4, band_bits=8, threshold=0.3)
-    dup_b = {r.vec_b for r in pairs.select("vec_b").distinct().collect()}
-    want = {r.vec_id for r in vecs.select("vec_id").collect()} - dup_b
-
-    def run(split_bounds):
-        base = tempfile.mkdtemp(
-            prefix="kdp-anningest-test-",
-            dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-        )
-        stage = f"{base}/stage"
-        os.makedirs(stage)
-        try:
-            lo = 0
-            for i, hi in enumerate(split_bounds):
-                part = f"{base}/p{i}"
-                vecs.where(
-                    (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-                ).coalesce(1).write.mode("overwrite").parquet(part)
-                src = glob.glob(f"{part}/part-*.parquet")[0]
-                dst = f"{stage}/b{i}.parquet"
-                os.rename(src, dst)
-                os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-                lo = hi
-            stream = (
-                spark.readStream.schema("vec_id bigint, embedding array<float>")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(stage)
-            )
-            run_writer_available_now(
-                ann_dedup_ingest(
-                    stream, f"{base}/index", f"{base}/landed",
-                    n_bands=4, band_bits=8, threshold=0.3,
-                ),
-                f"{base}/ckpt",
-            )
-            landed = {
-                r.vec_id
-                for r in spark.read.parquet(f"{base}/landed").collect()
-            }
-            idx = sorted(
-                (r["vec_id"], r["band"], r["bkey"])
-                for r in spark.read.parquet(f"{base}/index").collect()
-            )
-            return landed, idx
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
-
-    landed_one, idx_one = run([45])
-    landed_three, idx_three = run([15, 30, 45])
-    assert landed_one == want
-    assert landed_three == want
-    full_idx = sorted(
-        (r["vec_id"], r["band"], r["bkey"])
-        for r in ann_band_table(vecs, 4, 8).collect()
-    )
-    assert idx_one == full_idx and idx_three == full_idx
-
-
-def test_decontaminate_ingest_landed_equals_batch_and_split_invariant(spark):
-    """Stateless streaming decontamination: the landed set must equal
-    the batch-mode `decontaminate` answer under BOTH a 1-batch and a
-    3-batch split (no arrival-order contract — the eval gram set is
-    frozen), and a replayed-looking duplicate batch must land nothing
-    new (exactly-once landing)."""
-    import glob
-    import os
-    import shutil
-
-    from kommunedata_data_pipeline_spark.operators.corpus import decontaminate
-    from kommunedata_data_pipeline_spark.streaming.ingest import (
-        decontaminate_ingest,
-        run_writer_available_now,
-    )
-
-    d = (
-        load_table(spark, "/root/testdata/sf0.001", "documents")
-        .select("doc_id", "text")
-        .where(F.col("doc_id") < 90)
-    )
-    train = d.where(F.col("doc_id") % 2 == 0)
-    eval_df = d.where(F.col("doc_id") % 2 == 1)
-    want = {
-        (r.doc_id, r.n_ngrams)
-        for r in decontaminate(train, eval_df, n=8).collect()
-    }
-    assert want  # the slice must actually keep something
-
-    def run(split_bounds):
-        base = tempfile.mkdtemp(
-            prefix="kdp-decon-test-",
-            dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-        )
-        stage = f"{base}/stage"
-        os.makedirs(stage)
-        try:
-            lo = 0
-            for i, hi in enumerate(split_bounds):
-                part = f"{base}/p{i}"
-                train.where(
-                    (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-                ).coalesce(1).write.mode("overwrite").parquet(part)
-                src = glob.glob(f"{part}/part-*.parquet")[0]
-                dst = f"{stage}/b{i}.parquet"
-                os.rename(src, dst)
-                os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-                lo = hi
-            stream = (
-                spark.readStream.schema("doc_id bigint, text string")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(stage)
-            )
-            run_writer_available_now(
-                decontaminate_ingest(stream, eval_df, f"{base}/landed", n=8),
-                f"{base}/ckpt",
-            )
-            landed = {
-                (r.doc_id, r.n_ngrams)
-                for r in spark.read.parquet(f"{base}/landed").collect()
-            }
-            # replay the whole corpus once more through a FRESH stream
-            # (at-least-once delivery): exactly-once landing must hold
-            stream2 = (
-                spark.readStream.schema("doc_id bigint, text string")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(stage)
-            )
-            run_writer_available_now(
-                decontaminate_ingest(stream2, eval_df, f"{base}/landed", n=8),
-                f"{base}/ckpt2",
-            )
-            relanded = [
-                r.doc_id
-                for r in spark.read.parquet(f"{base}/landed").collect()
-            ]
-            assert len(relanded) == len(set(relanded)) == len(landed)
-            return landed
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
-
-    assert run([90]) == want
-    assert run([30, 60, 90]) == want
